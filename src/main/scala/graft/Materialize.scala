@@ -45,6 +45,10 @@ object Materialize {
   val modeProp = "graft.materialize.mode"
   private def mode: String = sys.props.getOrElse(modeProp, "local")
 
+  /** Whether an eager pin runs a job in the current mode (it does not
+    * in `none`) — [[Fixpoint]] observes its round signatures in that job. */
+  private[graft] def pinRunsJob: Boolean = mode != "none"
+
   implicit class PinOps[T](private val ds: Dataset[T]) extends AnyVal {
     /** Materialize this frame as the configured mode's checkpoint.
       * `eager = false` defers the job to the first downstream action

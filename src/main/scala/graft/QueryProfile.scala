@@ -20,10 +20,11 @@ object QueryProfile {
     sys.env.get("SPARK_GRAFT_MATMODE").foreach(m =>
       sys.props(Materialize.modeProp) = m)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.parseCpus(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
     sys.env.get("SPARK_GRAFT_OPENCOST").foreach(v =>

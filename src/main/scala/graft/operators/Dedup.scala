@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
 import graft.functions.Portable
 import graft.Materialize.PinOps
 
@@ -574,36 +575,52 @@ object Dedup {
   /** Connected components over near-duplicate pairs — the step that
     * turns pairwise matches into dedup clusters (cluster_id = min doc_id
     * in the component; the cluster representative to keep). Plain
-    * min-label propagation to fixpoint; each iteration is one join +
-    * aggregation, checkpointed so lineage stays flat. Components from
-    * near-dup detection have tiny diameters, so this converges in a few
-    * rounds; the web-scale variant is the large-star/small-star
-    * alternation with the identical per-round plan shape. */
+    * min-label propagation to fixpoint, run by [[graft.Fixpoint]]: each
+    * round is one join + aggregation, pinned so lineage stays flat, and
+    * stops when the (node, label) checksum repeats — labels only ever
+    * decrease, so an unchanged checksum is an unchanged labelling.
+    * Components from near-dup detection have tiny diameters, so this
+    * converges in a few rounds; the web-scale variant is the
+    * large-star/small-star alternation with the identical per-round
+    * plan shape. */
   def clusters(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .distinct()
       .pin(eager = true)
-    var labels = edges.select(col("a").as("node")).distinct()
+    val labels0 = edges.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
-      .pin(eager = true)
-    var changed = 1L
-    while (changed > 0) {
+    val labels = Fixpoint("label propagation",
+        Fixpoint.start(labels0, Fixpoint.checksum(col("node"), col("label"))),
+        ccMaxRounds) { labels =>
       val neighborMin = edges
         .join(labels.select(col("node").as("b"), col("label").as("blabel")), Seq("b"))
         .groupBy(col("a").as("node"))
         .agg(min(col("blabel")).as("nlabel"))
-      val updated = labels.join(neighborMin, Seq("node"), "left")
+      labels.join(neighborMin, Seq("node"), "left")
         .select(col("node"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("new_label"),
-          col("label"))
-        .pin(eager = true)
-      changed = updated.filter(col("new_label") < col("label")).count()
-      labels = updated.select(col("node"), col("new_label").as("label"))
+          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
     }
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
       .orderBy(col("doc_id"))
   }
+
+  /** Edge-count threshold below which a convergent graph operator
+    * finishes in one task instead of distributed rounds — the CC analog
+    * of Spark's broadcast-join threshold. It gates two operators:
+    * [[clustersBigStar]] (union-find) and the k-core peel
+    * ([[Similarity.kcorePeel]], a linear degree peel). The candidate-
+    * pair sets that near-dup banding emits and the k-bounded mutual-kNN
+    * graphs are usually FAR smaller than the corpus, and at that size
+    * the distributed rounds are pure scheduling latency (∼15 tiny
+    * jobs). 4M edges ≈ 64 MB of longs — one comfortable task. Above it,
+    * the distributed rounds run unchanged. */
+  val ccLocalMaxEdges: Long = 4L * 1024 * 1024
+
+  /** Safety cap on [[clusters]] and [[clustersBigStar]] rounds:
+    * label propagation needs O(diameter) rounds, the star alternation
+    * O(log n); past the cap the loop fails loud instead of stalling. */
+  val ccMaxRounds = 256
 
   /** Connected components via large-star/small-star alternation (the
     * web-scale variant of [[clusters]]): converges in O(log n) rounds on
@@ -611,26 +628,22 @@ object Dedup {
     * a chain-shaped near-dup corpus turns into a long serial tail. Each
     * round is two (join + aggregation) passes over the edge set, edges
     * only ever re-point toward smaller node ids, and the fixpoint is a
-    * star forest: every node points at its component's min id.
+    * star forest: every non-minimal node points at its component's min
+    * id.
     *
     *   - large-star(u): m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u),
     *     v > u — strictly-larger neighbors re-point at the local min.
     *   - small-star(u) on (u > v)-oriented edges: m = min(N(u)); emit
     *     (v, m) for v ∈ N(u) \ {m}, plus (u, m).
     *
-    * Convergence is detected by an order-insensitive checksum
-    * (count + bit_xor of per-edge hashes) — no driver-side edge
-    * materialization at any point. Output schema equals [[clusters]]:
+    * [[graft.Fixpoint]] runs the rounds and detects convergence by an
+    * order-insensitive checksum (count + bit_xor of per-edge hashes)
+    * observed in each round's pin — no driver-side edge
+    * materialization at any point. Up to `localMaxEdges` distinct edges
+    * (see [[ccLocalMaxEdges]]; 0 forces the distributed rounds) one
+    * task computes the same star forest by union-find
+    * ([[starForestLocal]]). Output schema equals [[clusters]]:
     * (doc_id, cluster_id = component min). */
-  /** Edge-count threshold below which [[clustersBigStar]] takes the
-    * single-task union-find fast path — the CC analog of Spark's
-    * broadcast-join threshold: the candidate-pair sets that near-dup
-    * banding emits are usually FAR smaller than the corpus, and at that
-    * size the distributed star alternation is pure scheduling latency
-    * (∼15 tiny jobs). 4M edges ≈ 64 MB of longs — one comfortable
-    * task. Above it, the O(log n) distributed rounds run unchanged. */
-  val ccLocalMaxEdges: Long = 4L * 1024 * 1024
-
   def clustersBigStar(pairs: DataFrame,
       localMaxEdges: Long = ccLocalMaxEdges): DataFrame = {
     val oriented = pairs
@@ -638,19 +651,6 @@ object Dedup {
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
-    var edges = oriented.pin(eager = true)
-
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    // size probe shares the first convergence-checksum job — no extra
-    // count() action on either path
-    var cs = checksum(edges)
-    if (cs._1 <= localMaxEdges) return clustersLocal(edges)
-    val allNodes = edges
-      .select(explode(array(col("u"), col("v"))).as("node")).distinct()
-      .pin(eager = true)
     def largeStar(e: DataFrame): DataFrame = {
       val und = e.select(col("u"), col("v"))
         .union(e.select(col("v").as("u"), col("u").as("v")))
@@ -666,31 +666,29 @@ object Dedup {
         .union(mins.select(col("u"), col("m").as("v")))
         .distinct()
     }
-
-    var converged = cs._1 == 0L
-    while (!converged) {
-      val next = smallStar(largeStar(edges)).pin(eager = true)
-      val ncs = checksum(next)
-      converged = ncs == cs
-      edges = next
-      cs = ncs
-    }
-    val roots = allNodes
-      .join(edges.select(col("u").as("node")), Seq("node"), "left_anti")
-    edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
-      .union(roots.select(col("node").as("doc_id"), col("node").as("cluster_id")))
+    val star = Fixpoint("big-star CC",
+        Fixpoint.start(oriented, Fixpoint.checksum(col("u"), col("v"))),
+        ccMaxRounds,
+        local = Some(Fixpoint.Local(localMaxEdges, starForestLocal)))(
+      e => smallStar(largeStar(e)))
+    // in a star forest the component mins are exactly the edge targets
+    // (a min never points anywhere), and every node of the input sits
+    // in a component of at least two nodes
+    val roots = star.select(col("v")).distinct()
+    star.select(col("u").as("doc_id"), col("v").as("cluster_id"))
+      .union(roots.select(col("v").as("doc_id"), col("v").as("cluster_id")))
       .orderBy(col("doc_id"))
   }
 
   /** Single-task union-find over a (u, v) edge frame that fits one
     * partition — the [[clustersBigStar]] fast path. Union-by-min with
     * path compression: the smaller root always absorbs the larger, so
-    * each set's root IS its minimum id and the output equals the
-    * distributed fixpoint exactly, independent of edge order
-    * (ClusterProps proves both paths identical on random graphs). One
-    * job, no driver materialization — the single task streams the edge
-    * iterator and emits (doc_id, cluster_id) rows. */
-  private def clustersLocal(edges: DataFrame): DataFrame = {
+    * each set's root IS its minimum id, and the emitted (node, root)
+    * edges for every non-root node are exactly the distributed star
+    * forest, independent of edge order (ClusterProps proves both paths
+    * identical on random graphs). The single task streams the edge
+    * iterator; nothing is materialized on the driver. */
+  private def starForestLocal(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     val out = edges.select(col("u"), col("v")).coalesce(1).rdd
       .mapPartitions { it =>
@@ -717,15 +715,14 @@ object Dedup {
             if (ru < rv) parent(rv) = ru else parent(ru) = rv
           }
         }
-        nodes.keysIterator.map(n =>
-          org.apache.spark.sql.Row(n, find(n)))
+        nodes.keysIterator.map(n => (n, find(n))).filter(p => p._1 != p._2)
+          .map(p => org.apache.spark.sql.Row(p._1, p._2))
       }
     spark.createDataFrame(out, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.StructField("u",
           org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cluster_id",
+        org.apache.spark.sql.types.StructField("v",
           org.apache.spark.sql.types.LongType, nullable = false))))
-      .orderBy(col("doc_id"))
   }
 
   /** Span width (tokens) for [[spanDedup]] — shared with the oracle. */

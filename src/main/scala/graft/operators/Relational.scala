@@ -841,11 +841,13 @@ object Relational {
     val li = Tables.lineitem(spark, dir).select(col("l_extendedprice"))
     // exact boundaries from the bounded distinct-price aggregate, not
     // the one-reducer `percentile` buffer — see [[Quantiles]]
+    // rounded once on the one-row bounds frame, not per fact row
+    // (Spark rounds doubles through BigDecimal)
     val bounds = Quantiles.exactPercentiles(
-      li.select(col("l_extendedprice").as("v")), (1 to 9).map(_ / 10.0))
+        li.select(col("l_extendedprice").as("v")), (1 to 9).map(_ / 10.0))
+      .select(transform(col("bs"), b => round(b, 6)).as("bs"))
     val decile = (1 to 9).map(i =>
-      (col("l_extendedprice") > round(element_at(col("bs"), i), 6))
-        .cast("long"))
+      (col("l_extendedprice") > element_at(col("bs"), i)).cast("long"))
       .reduce(_ + _)
     li.crossJoin(broadcast(bounds))
       .select(decile.as("decile"))

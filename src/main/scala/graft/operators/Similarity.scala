@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import graft.Fixpoint
 import graft.Materialize.PinOps
 
 /** Similarity search over the `embeddings` table
@@ -2252,14 +2253,14 @@ object Similarity {
     * tree-like periphery. Emits per node: initial degree, post-peel
     * degree, and the in-core flag.
     *
-    * Scale: each round is ONE hash aggregate (degrees) + two equi-
-    * joins of the edge list against the surviving-node set — shuffles
-    * on vertex ids only, no all-pairs, degrees bounded by k. Round
-    * count is the peel cascade depth (data-dependent); convergence is
-    * detected by the per-round edge COUNT — the edge set only ever
-    * shrinks, so count equality IS set equality, the same monotone
-    * stability check [[Dedup.clustersBigStar]] uses — with each round
-    * pinned so the plan cannot double per iteration. */
+    * Scale: the k-core is unique, so the peel picks its form from the
+    * observed edge count (see [[kcorePeel]]): up to
+    * [[Dedup.ccLocalMaxEdges]] edges one task peels them all; above
+    * it each round is ONE hash aggregate (degrees) + two equi-joins
+    * of the edge list against the surviving-node set — shuffles on
+    * vertex ids only, no all-pairs, degrees bounded by k — run by
+    * [[graft.Fixpoint]] until the edge count is stable (the edge set
+    * only ever shrinks, so count equality IS set equality). */
   def kcore(embeddings: DataFrame, k: Int = 3,
       cells: Int = autoCells): DataFrame =
     kcorePeel(mutualKnnEdges(embeddings, k, cells)
@@ -2269,14 +2270,16 @@ object Similarity {
     * split from [[kcore]] so deep-cascade graphs (paths, which peel
     * exactly one layer per round) can be fed directly in specs
     * proving the stability check. `coreK` is the degree threshold
-    * ([[kcoreK]] for the flagship query; [[coreness]] sweeps it). */
-  def kcorePeel(edges0: DataFrame, coreK: Int = kcoreK): DataFrame = {
-    val e0 = edges0.select(col("vec_a"), col("vec_b")).pin(eager = true)
-    val deg0 = nodeDegrees(e0).pin(eager = true)
-    val edges = kcoreEdges(e0, coreK)
+    * ([[kcoreK]] for the flagship query; [[coreness]] sweeps it).
+    * `localMaxEdges` is the single-task threshold of [[kcoreEdges]];
+    * 0 forces the distributed rounds (the specs run both forms). */
+  def kcorePeel(edges0: DataFrame, coreK: Int = kcoreK,
+      localMaxEdges: Long = Dedup.ccLocalMaxEdges): DataFrame = {
+    val s0 = Fixpoint.start(edges0.select(col("vec_a"), col("vec_b")))
+    val edges = kcoreEdges(s0, coreK, localMaxEdges)
     val degF = nodeDegrees(edges)
       .select(col("vec_id"), col("deg").as("deg_final"))
-    deg0.select(col("vec_id"), col("deg").as("deg0"))
+    nodeDegrees(s0.frame).select(col("vec_id"), col("deg").as("deg0"))
       .join(degF, Seq("vec_id"), "left")
       .select(col("vec_id"), col("deg0"),
         coalesce(col("deg_final"), lit(0L)).as("deg_final"),
@@ -2288,10 +2291,14 @@ object Similarity {
     .select(explode(array(col("vec_a"), col("vec_b"))).as("vec_id"))
     .groupBy(col("vec_id")).agg(count(lit(1)).as("deg"))
 
-  /** The peel loop itself: the surviving edge set of the `coreK`-core
-    * of an already-PINNED (vec_a, vec_b) frame. Shared by
-    * [[kcorePeel]] and the threshold chain in [[coreness]]. */
-  private[graft] def kcoreEdges(e0: DataFrame, coreK: Int): DataFrame = {
+  /** The surviving edge set of the `coreK`-core of a pinned (vec_a,
+    * vec_b) frame. Shared by [[kcorePeel]] and the threshold chain in
+    * [[coreness]]. Up to `localMaxEdges` edges (observed in the pin,
+    * no extra job) one task runs [[kcoreLocal]]; above it
+    * [[graft.Fixpoint]] runs the distributed peel. Both give the same
+    * edges: the k-core is unique. */
+  private[graft] def kcoreEdges(s0: Fixpoint.Start, coreK: Int,
+      localMaxEdges: Long): DataFrame = {
     // One peel layer: drop every node with degree < coreK, then every
     // edge touching a dropped node. No pin on the keep set: its
     // aggregate subtree appears in both semi-joins and AQE stage reuse
@@ -2313,34 +2320,70 @@ object Similarity {
         .join(keep.select(col("vec_id").as("vec_b")), Seq("vec_b"), "left_semi")
         .select(col("vec_a"), col("vec_b"))
     }
-    var edges = e0
-    var nEdges = edges.count()
-    var converged = nEdges == 0L
-    var rounds = 0
-    while (!converged) {
-      rounds += 2
-      if (rounds > kcoreMaxRounds) throw new IllegalStateException(
-        s"kcore peel did not converge within $kcoreMaxRounds rounds " +
-          s"($nEdges edges still shrinking) — raise kcoreMaxRounds")
-      // TWO peel layers per pinned SQL execution (the bfsRadius
-      // double-step argument, round 12): per-round cost is dominated by
-      // the fixed price of an execution (planning + AQE stage
-      // scheduling + checkpoint write), so halving the execution count
-      // halves the serial chain — a depth-D cascade pays D/2 round
-      // latencies. Exactness: peeling only removes edges, so
-      // next ⊆ mid ⊆ edges; count(next) == count(edges) forces all
-      // three sets equal, i.e. count equality across the DOUBLE round
-      // still detects the single-step fixpoint exactly (a cascade that
-      // converges at an odd layer just makes the second layer a no-op).
-      // The mid layer's exchanges are shared across its three consumers
-      // via AQE stage reuse, same as the keep set's.
-      val next = peelOnce(peelOnce(edges)).pin(eager = true)
-      val n = next.count()
-      converged = n == nEdges
-      edges = next
-      nEdges = n
-    }
+    // TWO peel layers per pinned SQL execution (the bfsRadius
+    // double-step argument, round 12): per-round cost is dominated by
+    // the fixed price of an execution, so halving the execution count
+    // halves the serial chain. Exact because peeling only removes
+    // edges (the Fixpoint `layers` contract); a cascade that converges
+    // at an odd layer just makes the second layer a no-op. Not more
+    // than two: each layer reads its input three times, so the plan of
+    // one execution grows ~3^layers (four layers measured slower).
+    Fixpoint("kcore peel", s0, kcoreMaxRounds, layers = 2,
+      local = Some(Fixpoint.Local(localMaxEdges, kcoreLocal(_, coreK))))(
+      peelOnce)
+  }
+
+  /** The [[kcoreEdges]] single-task finish: a linear degree peel over
+    * primitive arrays. Nodes get dense ids, every edge is listed under
+    * both endpoints (CSR), and a queue removes each node whose degree
+    * falls below `coreK` once, dropping its live edges and decrementing
+    * the other endpoint — O(nodes + edges). Degrees count edge
+    * multiplicity, exactly as the distributed `nodeDegrees` does, so
+    * the surviving edges (duplicates included) equal the distributed
+    * fixpoint. */
+  private def kcoreLocal(edges: DataFrame, coreK: Int): DataFrame = {
+    val types = Seq("vec_a", "vec_b").map(edges.schema(_).dataType)
+    val pairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     edges
+      .select(col("vec_a").cast("long"), col("vec_b").cast("long"))
+      .as(pairs).coalesce(1)
+      .mapPartitions { it =>
+        val (ab, bb) = (Array.newBuilder[Long], Array.newBuilder[Long])
+        it.foreach { case (a, b) => ab += a; bb += b }
+        val (ea, eb) = (ab.result(), bb.result())
+        val ids = scala.collection.mutable.LongMap.empty[Int]
+        val (ia, ib) = (ea.map(x => ids.getOrElseUpdate(x, ids.size)),
+          eb.map(x => ids.getOrElseUpdate(x, ids.size)))
+        val (n, m) = (ids.size, ea.length)
+        val deg = new Array[Int](n)
+        for (e <- 0 until m) { deg(ia(e)) += 1; deg(ib(e)) += 1 }
+        val start = deg.scanLeft(0)(_ + _)
+        val fill = start.clone()
+        val inc = new Array[Int](2 * m)
+        def link(x: Int, e: Int): Unit = { inc(fill(x)) = e; fill(x) += 1 }
+        for (e <- 0 until m) { link(ia(e), e); link(ib(e), e) }
+        val gone = new Array[Boolean](n)
+        val dropped = new Array[Boolean](m)
+        val queue = new Array[Int](n)
+        var tail = 0
+        def drop(x: Int): Unit =
+          if (!gone(x) && deg(x) < coreK) {
+            gone(x) = true; queue(tail) = x; tail += 1
+          }
+        (0 until n).foreach(drop)
+        var head = 0
+        while (head < tail) {
+          val x = queue(head); head += 1
+          for (j <- start(x) until start(x + 1); e = inc(j) if !dropped(e)) {
+            dropped(e) = true
+            deg(ia(e)) -= 1; deg(ib(e)) -= 1
+            drop(ia(e)); drop(ib(e))
+          }
+        }
+        (0 until m).iterator.filterNot(dropped).map(e => (ea(e), eb(e)))
+      }(pairs)
+      .toDF("vec_a", "vec_b")
+      .select(col("vec_a").cast(types(0)), col("vec_b").cast(types(1)))
   }
 
   /** Full core decomposition over the mutual-kNN graph: each node's
@@ -2355,26 +2398,27 @@ object Similarity {
     * All-integer output — no float crossings anywhere. */
   def coreness(embeddings: DataFrame, k: Int = 3,
       cells: Int = autoCells): DataFrame = {
-    val e0 = mutualKnnEdges(embeddings, k, cells)
-      .select(col("vec_a"), col("vec_b")).pin(eager = true)
-    val deg0 = nodeDegrees(e0).pin(eager = true)
+    val s0 = Fixpoint.start(mutualKnnEdges(embeddings, k, cells)
+      .select(col("vec_a"), col("vec_b")))
+    val deg0 = nodeDegrees(s0.frame).pin(eager = true)
     // CHAIN the peels: the c-core equals the c-core of the (c−1)-core
     // (cores nest), so each threshold starts from the previous
     // survivors — strictly less work than k independent peels, same
     // fixpoints (the oracle states the independent form; the hash
     // proves equality). A node is in the c-core iff it remains an
     // endpoint of the surviving edge set.
-    var cur = e0
+    var cur = s0.frame
     val flags = (1 to k).map { c =>
       if (c == 1) {
         // The 1-core of ANY edge list is the edge list itself: every
         // endpoint has degree ≥ 1 by construction, so the c=1 peel is
         // provably the identity — its flag set is exactly deg0's node
         // set, and running the convergent loop for it would spend one
-        // full execution + pin + two counts to discover a no-op.
+        // full execution + pin to discover a no-op.
         deg0.select(col("vec_id"), lit(true).as("c1"))
       } else {
-        cur = kcoreEdges(cur, c)
+        val start = if (c == 2) s0 else Fixpoint.start(cur)
+        cur = kcoreEdges(start, c, Dedup.ccLocalMaxEdges)
         nodeDegrees(cur).select(col("vec_id"), lit(true).as(s"c$c"))
       }
     }
@@ -2562,8 +2606,10 @@ object Similarity {
     * k-bounded on a mutual-kNN graph) + a LEFT SEMI refilter of the
     * edge list (the [[kcorePeel]] lesson: semi-join stats stay linear
     * where an inner join's size estimate would grow 3^round digits
-    * and stall the per-round checkpoint). Convergence by edge count —
-    * monotone shrink, count equality is set equality. */
+    * and stall the per-round checkpoint). [[graft.Fixpoint]] runs the
+    * rounds to convergence by edge count — monotone shrink, count
+    * equality is set equality. Distributed rounds only: no workload
+    * measures a single-task form. */
   def ktruss(embeddings: DataFrame, k: Int = 3,
       cells: Int = autoCells): DataFrame =
     ktrussPeel(mutualKnnEdges(embeddings, k, cells)
@@ -2573,7 +2619,8 @@ object Similarity {
     * (vec_a < vec_b, deduplicated) — split from [[ktruss]] for
     * deep-cascade specs, like [[kcorePeel]]. */
   def ktrussPeel(edges0: DataFrame): DataFrame = {
-    val e0 = edges0.select(col("vec_a"), col("vec_b")).pin(eager = true)
+    val s0 = Fixpoint.start(edges0.select(col("vec_a"), col("vec_b")))
+    val e0 = s0.frame
     // support = triangles through each edge: common neighbors of the
     // endpoints in the undirected adjacency
     def support(e: DataFrame): DataFrame = {
@@ -2590,10 +2637,6 @@ object Similarity {
     val sup0 = support(e0)
       .select(col("vec_a"), col("vec_b"), col("support").as("sup0"))
       .pin(eager = true)
-    var edges = e0
-    var nEdges = edges.count()
-    var converged = nEdges == 0L
-    var rounds = 0
     // NOT double-stepped, unlike kcoreEdges/bfsRadius: measured in
     // round 13 (3 alternating A/B pairs), two truss layers per pinned
     // execution read jobs 43→47, tasks 47→53, task-s 2.2→3.2 — the
@@ -2601,20 +2644,11 @@ object Similarity {
     // each endpoint vs the semi-join pair key), so nothing below it is
     // reused and the whole wedge front recomputes per consumer — the
     // same shape that made the round-12 und-pin drop regress.
-    while (!converged) {
-      rounds += 1
-      if (rounds > ktrussMaxRounds) throw new IllegalStateException(
-        s"ktruss peel did not converge within $ktrussMaxRounds rounds " +
-          s"($nEdges edges still shrinking) — raise ktrussMaxRounds")
-      val qual = support(edges)
+    val edges = Fixpoint("ktruss peel", s0, ktrussMaxRounds) { e =>
+      val qual = support(e)
         .filter(col("support") >= ktrussK - 2)
         .select(col("vec_a"), col("vec_b"))
-      val next = edges.join(qual, Seq("vec_a", "vec_b"), "left_semi")
-        .pin(eager = true)
-      val n = next.count()
-      converged = n == nEdges
-      edges = next
-      nEdges = n
+      e.join(qual, Seq("vec_a", "vec_b"), "left_semi")
     }
     val supF = support(edges)
       .select(col("vec_a"), col("vec_b"), col("support").as("sup_final"))

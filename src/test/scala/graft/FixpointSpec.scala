@@ -1,0 +1,147 @@
+package graft
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Dedup, Similarity}
+
+/** The convergent-loop combinator: its max-rounds guard, its observed
+  * signatures in every Materialize mode, and the job counts of the
+  * k-core peel on both of its forms (counts repeat exactly run to run,
+  * so a lost saving shows here without any timing). */
+class FixpointSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def withMode[A](mode: String)(body: => A): A = {
+    val prev = sys.props.get(Materialize.modeProp)
+    sys.props(Materialize.modeProp) = mode
+    try body
+    finally prev match {
+      case Some(v) => sys.props(Materialize.modeProp) = v
+      case None => sys.props.remove(Materialize.modeProp)
+    }
+  }
+
+  // path 0-1-...-19 (ten peel layers) plus a disjoint triangle: the
+  // 2-core is the triangle
+  private val pathTriangle =
+    (0L until 19L).map(i => (i, i + 1)) ++
+      Seq((100L, 101L), (101L, 102L), (100L, 102L))
+
+  private def core(localMaxEdges: Long): Set[Long] =
+    Similarity.kcorePeel(pathTriangle.toDF("vec_a", "vec_b"),
+        localMaxEdges = localMaxEdges)
+      .collect().filter(_.getBoolean(3)).map(_.getLong(0)).toSet
+
+  /** Jobs and SQL-execution descriptions `body` runs, attributed by job
+    * group. A marker job after `body` drains the listener bus: events
+    * arrive in order, so once the marker is seen every earlier event
+    * has been counted. */
+  private def counted(tag: String)(body: => Unit): (Int, Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val execs = new ConcurrentLinkedQueue[String]
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$tag-drain" => drained.countDown()
+          case _ =>
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(tag) =>
+          execs.add(s.description)
+        case _ =>
+      }
+    }
+    // the group id alone, not setJobGroup: its description would
+    // replace each execution's call site, which the guard reads
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setLocalProperty("spark.jobGroup.id", g)
+      try f finally sc.setLocalProperty("spark.jobGroup.id", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup(tag)(body)
+      inGroup(s"$tag-drain")(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (jobs.get, execs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a step that never converges fails with the max-rounds message") {
+    val s0 = Fixpoint.start(Seq(1L, 2L, 3L).toDF("x"),
+      Fixpoint.checksum(col("x")))
+    val e = intercept[IllegalStateException] {
+      Fixpoint("counter", s0, maxRounds = 5)(_.select((col("x") + 1).as("x")))
+    }
+    assert(e.getMessage.contains("counter did not converge within 5 rounds"),
+      e.getMessage)
+    // layers count against the cap too: 3 rounds of 2 layers exceed 5
+    val e2 = intercept[IllegalStateException] {
+      Fixpoint("counter", s0, maxRounds = 5, layers = 2)(
+        _.select((col("x") + 1).as("x")))
+    }
+    assert(e2.getMessage.contains("within 5 rounds"), e2.getMessage)
+  }
+
+  test("the observed signature equals count() and the aggregate in the " +
+      "local, reliable and none Materialize modes") {
+    val df = spark.range(0, 1000).select((col("id") % 97).as("k")).distinct()
+    val n = df.count()
+    val cs = Fixpoint.checksum(col("k"))
+    val expect = df.agg(cs.aggs.head, cs.aggs.tail: _*).head().toSeq
+    for (mode <- Seq("local", "reliable", "none")) withClue(s"mode=$mode: ") {
+      withMode(mode) {
+        assert(Fixpoint.start(df).rowCount === n)
+        assert(Fixpoint.start(df).sig === Seq(n))
+        assert(Fixpoint.start(df, cs).sig === expect)
+        // a full distributed loop on a short cascade (triangle plus a
+        // pendant edge: two rounds) — short because `none` pins
+        // nothing, so there the plan grows ~3^layers
+        val pendant = Similarity.kcorePeel(
+            (pathTriangle.takeRight(3) :+ ((102L, 0L))).toDF("vec_a", "vec_b"),
+            localMaxEdges = 0L)
+          .collect().filter(_.getBoolean(3)).map(_.getLong(0)).toSet
+        assert(pendant === Set(100L, 101L, 102L))
+      }
+    }
+  }
+
+  test("job-count guard: the k-core peel's single-task finish stays at " +
+      "a fixed small job count, and its distributed rounds run no count " +
+      "job beyond each round's pin") {
+    withMode("local") {
+      val (localJobs, localExecs) = counted("kcore-local") {
+        assert(core(Dedup.ccLocalMaxEdges) === Set(100L, 101L, 102L))
+      }
+      // one eager pin with the observed count, then the result query
+      assert(localExecs.size === 2, localExecs)
+      assert(localJobs <= LocalJobs, s"local path ran $localJobs jobs")
+
+      val (distJobs, distExecs) = counted("kcore-dist") {
+        assert(core(0L) === Set(100L, 101L, 102L))
+      }
+      // start pin + 6 double-layer rounds (ten layers to strip the
+      // path, one no-op layer pair to see it stable) + result query;
+      // a count or aggregate per round would add executions
+      assert(distExecs.size === 8, distExecs)
+      assert(!distExecs.exists(d => d.startsWith("count at") ||
+        d.startsWith("head at")), distExecs)
+      assert(distJobs <= DistJobs, s"distributed path ran $distJobs jobs")
+    }
+  }
+
+  // measured on the suite's session (local[2], 2 shuffle partitions);
+  // job counts under AQE are deterministic for a fixed plan and config
+  private val LocalJobs = 6
+  private val DistJobs = 37
+}

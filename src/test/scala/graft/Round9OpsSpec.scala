@@ -49,17 +49,21 @@ class Round9OpsSpec extends SparkSpec {
     val path = (0L until 19L).map(i => (i, i + 1))
     val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val edges = (path ++ tri).toDF("vec_a", "vec_b")
-    val out = Similarity.kcorePeel(edges).collect()
-    val core = out.filter(_.getBoolean(3)).map(_.getLong(0)).toSet
-    assert(core === Set(100L, 101L, 102L),
-      s"2-core of path+triangle must be the triangle, got $core")
-    // every path node fully peeled: deg_final 0
-    out.filter(r => r.getLong(0) < 100L).foreach { r =>
-      assert(r.getLong(2) === 0L, s"path node not fully peeled: $r")
-    }
-    // triangle keeps both edges per node
-    out.filter(r => r.getLong(0) >= 100L).foreach { r =>
-      assert(r.getLong(2) === 2L, s"triangle node degree wrong: $r")
+    // both forms: the single-task peel (default threshold) and the
+    // distributed rounds (threshold 0)
+    for (localMax <- Seq(Dedup.ccLocalMaxEdges, 0L)) withClue(s"localMaxEdges=$localMax: ") {
+      val out = Similarity.kcorePeel(edges, localMaxEdges = localMax).collect()
+      val core = out.filter(_.getBoolean(3)).map(_.getLong(0)).toSet
+      assert(core === Set(100L, 101L, 102L),
+        s"2-core of path+triangle must be the triangle, got $core")
+      // every path node fully peeled: deg_final 0
+      out.filter(r => r.getLong(0) < 100L).foreach { r =>
+        assert(r.getLong(2) === 0L, s"path node not fully peeled: $r")
+      }
+      // triangle keeps both edges per node
+      out.filter(r => r.getLong(0) >= 100L).foreach { r =>
+        assert(r.getLong(2) === 2L, s"triangle node degree wrong: $r")
+      }
     }
   }
 
@@ -71,13 +75,18 @@ class Round9OpsSpec extends SparkSpec {
     // stability check must still stop at the true (non-empty) core.
     val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val edges = (tri :+ ((102L, 0L))).toDF("vec_a", "vec_b")
-    val out = Similarity.kcorePeel(edges).collect()
-    val core = out.filter(_.getBoolean(3)).map(_.getLong(0)).toSet
-    assert(core === Set(100L, 101L, 102L),
-      s"2-core must be the triangle, got $core")
-    val pendant = out.filter(_.getLong(0) == 0L).head
-    assert(pendant.getLong(1) === 1L && pendant.getLong(2) === 0L,
-      s"pendant must start at degree 1 and peel to 0: $pendant")
+    val cores = Seq(Dedup.ccLocalMaxEdges, 0L).map { localMax =>
+      withClue(s"localMaxEdges=$localMax: ") {
+        val out = Similarity.kcorePeel(edges, localMaxEdges = localMax).collect()
+        val core = out.filter(_.getBoolean(3)).map(_.getLong(0)).toSet
+        assert(core === Set(100L, 101L, 102L),
+          s"2-core must be the triangle, got $core")
+        val pendant = out.filter(_.getLong(0) == 0L).head
+        assert(pendant.getLong(1) === 1L && pendant.getLong(2) === 0L,
+          s"pendant must start at degree 1 and peel to 0: $pendant")
+        core
+      }
+    }
     // parity against a driver-side SINGLE-step peel to convergence
     var es = (tri :+ ((102L, 0L))).toSet
     var changed = true
@@ -89,8 +98,10 @@ class Round9OpsSpec extends SparkSpec {
       changed = next != es
       es = next
     }
-    assert(es.toSeq.flatMap(e => Seq(e._1, e._2)).toSet === core,
-      "double-layer peel must equal the single-step fixpoint")
+    cores.foreach { core =>
+      assert(es.toSeq.flatMap(e => Seq(e._1, e._2)).toSet === core,
+        "double-layer peel must equal the single-step fixpoint")
+    }
   }
 
   // three mutually-nearest vectors => the mutual-kNN graph is a
