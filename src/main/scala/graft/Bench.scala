@@ -3,27 +3,13 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 object Bench {
-  /** `SPARK_GRAFT_CPUS` as a positive Int. It goes into `local[n]`,
-    * the shuffle partitions and, unquoted, into the JSON lines, so
-    * anything else fails here with a clear error. */
-  private[graft] def parseCpus(raw: String): Int =
-    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = parseCpus(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val cpus = GraftSession.cpus(4)
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Shuffle accounting per query (job-group attribution): measured,
     // not guessed — lets a round-over-round diff spot a plan regression

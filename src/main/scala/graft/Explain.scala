@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection entry: prints the formatted physical plan for one or
   * all registered queries — the feedback loop for shuffle/broadcast/
   * pushdown tuning (run: `sbt "runMain graft.Explain <sfDir> [query]"`). */
@@ -9,14 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.drop(1).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_ == n) }

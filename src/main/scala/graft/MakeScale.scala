@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize an N×-scaled copy of a testdata sfDir as
@@ -19,13 +19,7 @@ object MakeScale {
     val sfDir = args(0)
     val outDir = args(1)
     val n = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("WARN")
     import graft.sources.Tables
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Materialize.PinOps
@@ -12,13 +12,8 @@ import graft.Materialize.PinOps
   * scale. */
 object MicroProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -82,7 +77,7 @@ object MicroProbe {
         .pin(eager = true)
       next.count(): Unit
     }
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
     spark.stop()
   }
 }

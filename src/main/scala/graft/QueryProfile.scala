@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only measurement harness (guide §1): runs named queries and
   * reports, per query, wall seconds beside the scheduler-side
@@ -20,20 +19,13 @@ object QueryProfile {
     sys.env.get("SPARK_GRAFT_MATMODE").foreach(m =>
       sys.props(Materialize.modeProp) = m)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Bench.parseCpus(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    sys.env.get("SPARK_GRAFT_OPENCOST").foreach(v =>
-      builder.config("spark.sql.files.openCostInBytes", v))
-    sys.env.get("SPARK_GRAFT_EXTRACONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
+    val extra = sys.env.get("SPARK_GRAFT_OPENCOST").map(
+      "spark.sql.files.openCostInBytes" -> _).toSeq ++
+      sys.env.get("SPARK_GRAFT_EXTRACONF").toSeq.flatMap(_.split(";").map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        k -> v
+      })
+    val spark = GraftSession(GraftSession.cpus(32), extra: _*)
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new AtomicInteger

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Materialize.PinOps
@@ -23,14 +23,7 @@ object ScaleProbe {
       val rest = if (mode != "events") args.drop(2) else args.drop(1)
       if (rest.nonEmpty) rest.map(_.toInt).toSeq else Seq(1, 4, 16)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
 
     def multiplied(n: Int): DataFrame = {

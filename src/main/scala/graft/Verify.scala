@@ -1,9 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Writes each query's result to `outDir/<name>` and returns the names
+    * of the queries that failed. Each dir is deleted before its query
+    * runs, so a failed query leaves no result behind — not even the
+    * previous run's, which the oracle check would otherwise pass. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[String] =
+    queries.flatMap { case (name, fn) =>
+      val dir = new java.io.File(outDir, name)
+      try {
+        org.apache.commons.io.FileUtils.deleteDirectory(dir)
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir.getPath)
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+      finally
+        // drop orphaned pins (blocks + reliable-mode checkpoint data)
+        // between self-contained queries — same per-job isolation as
+        // Bench.timeOnce
+        Materialize.releasePins(spark)
+    }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated name filters (exact or prefix)
@@ -12,30 +36,11 @@ object Verify {
       val pats = args(2).split(",").toSeq
       name => pats.exists(p => name == p || name.startsWith(p))
     } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        finally
-          // drop orphaned pins (blocks + reliable-mode checkpoint data)
-          // between self-contained queries — same per-job isolation as
-          // Bench.timeOnce
-          Materialize.releasePins(spark)
-      }
-    }
+    val failed = dump(spark, sfDir, outDir,
+      SparkEntry.queries.toSeq.filter { case (name, _) => keep(name) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -56,5 +61,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -269,15 +269,17 @@ object StockPipeline {
     * that is exactly a window frame of ROWS BETWEEN 10 PRECEDING AND
     * 1 PRECEDING — expressed relationally so Catalyst plans it, and so
     * the DuckDB oracle states the identical frame. The streaming twin
-    * (`graft.streaming.SpikeState`) carries real keyed state and is
-    * parity-tested against this form.
+    * (`graft.streaming.SpikeState`, a `graft.streaming.KeyedFold`)
+    * carries the history as real keyed state, runs on any state-store
+    * provider, and is parity-tested against this form.
     *
     * Scale ceiling (measured by `graft.ScaleProbe`): this window
     * partitions by `ticker` — low cardinality (5 here) caps the stage's
     * parallelism at #tickers, each task sorting its ticker's minute
     * rows. Linear through 64× locally (minute-grade data is ~1000×
     * smaller than raw events), but on a real cluster with few keys the
-    * streaming twin (incremental state, no sort) or a time-bucketed
+    * streaming twin (incremental state; it sorts only each trigger's
+    * new rows per key) or a time-bucketed
     * carry-in rewrite is the scale path for this one stage.
     */
   def withSpike(joinedDf: DataFrame): DataFrame = {

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar ADX emission — schema matches the batch
   * [[graft.operators.TimeSeries.adxOhlc]] output. */
@@ -23,13 +22,16 @@ case class DxTerm(has: Boolean, dx: Double)
 /** The previous bar's extremes for the DM/TR deltas. */
 case class AdxPrevBar(high: Double, low: Double, close: Double)
 
-/** Streaming ADX on `transformWithState`: per ticker the previous
-  * bar, the last [[graft.operators.TimeSeries.AdxSpan]] (±DM, TR)
-  * terms and the last span DX values live in a `ValueState` + two
-  * `ListState`s — CONSTANT state per key — and each arriving bar
-  * emits the same two-level Wilder system as the batch kernel: the
-  * deepest twin yet (a chain OVER a chain's output), proving the
-  * mechanical recipe composes.
+/** The ADX carry: the last [[graft.operators.TimeSeries.AdxSpan]]
+  * (±DM, TR) terms and DX values (both NEWEST FIRST), and the previous
+  * bar. */
+case class AdxCarry(terms: List[AdxTerm], dxs: List[DxTerm],
+    prev: AdxPrevBar)
+
+/** Streaming ADX: per ticker an [[AdxCarry]] — CONSTANT state per key
+  * — and each arriving bar emits the same two-level Wilder system as
+  * the batch kernel: the deepest twin yet (a chain OVER a chain's
+  * output), proving the mechanical recipe composes.
   *
   * Bit-parity argument (spec-asserted): every sum accumulates in the
   * batch `reduce(_ + _)` textual order (i = 0 .. span−1) with literal
@@ -38,64 +40,6 @@ case class AdxPrevBar(high: Double, low: Double, close: Double)
   * the ratio tiers reproduce the batch association order
   * `(100.0 · s) / st` and its NULL guards (zero ΣTR → None DI, zero
   * DI sum → None DX, no DX yet → None ADX). */
-class AdxProcessor extends StatefulProcessor[String, OhlcRow, AdxRow] {
-
-  @transient private var terms: ListState[AdxTerm] = _
-  @transient private var dxs: ListState[DxTerm] = _
-  @transient private var prev: ValueState[AdxPrevBar] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    terms = getHandle.getListState[AdxTerm]("adx_terms",
-      Encoders.product[AdxTerm], TTLConfig.NONE)
-    dxs = getHandle.getListState[DxTerm]("adx_dxs",
-      Encoders.product[DxTerm], TTLConfig.NONE)
-    prev = getHandle.getValueState[AdxPrevBar]("adx_prev",
-      Encoders.product[AdxPrevBar], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[AdxRow] = {
-    import graft.operators.TimeSeries.AdxSpan
-    var ts: List[AdxTerm] = if (terms.exists()) terms.get().toList else Nil
-    var ds: List[DxTerm] = if (dxs.exists()) dxs.get().toList else Nil
-    var pb: Option[AdxPrevBar] =
-      if (prev.exists()) Some(prev.get()) else None
-    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
-      val term = pb match {
-        case None => AdxTerm(has = false, 0.0, 0.0, 0.0)
-        case Some(p) =>
-          val up = r.high - p.high
-          val dn = p.low - r.low
-          AdxTerm(has = true,
-            if (up > dn && up > 0.0) up else 0.0,
-            if (dn > up && dn > 0.0) dn else 0.0,
-            math.max(math.max(r.high - r.low, math.abs(r.high - p.close)),
-              math.abs(r.low - p.close)))
-      }
-      ts = (term :: ts).take(AdxSpan)
-      pb = Some(AdxPrevBar(r.high, r.low, r.close))
-      val (sp, sm, st) = AdxState.chainFold(ts, AdxSpan)
-      val di: Option[(Double, Double)] =
-        if (st == 0.0) None else Some((100.0 * sp / st, 100.0 * sm / st))
-      val dx: Option[Double] = di.flatMap { case (pdi, mdi) =>
-        if (pdi + mdi == 0.0) None
-        else Some(100.0 * math.abs(pdi - mdi) / (pdi + mdi))
-      }
-      ds = (DxTerm(dx.isDefined, dx.getOrElse(0.0)) :: ds).take(AdxSpan)
-      val (sdx, ndx) = AdxState.dxFold(ds, AdxSpan)
-      AdxRow(key, r.window_timestamp,
-        di.map(d => MacdState.round6(d._1)),
-        di.map(d => MacdState.round6(d._2)),
-        dx.map(MacdState.round6),
-        if (ndx > 0L) Some(MacdState.round6(sdx / ndx)) else None)
-    }
-    terms.put(ts.toArray)
-    dxs.put(ds.toArray)
-    pb.foreach(prev.update)
-    out.iterator
-  }
-}
-
 object AdxState {
 
   /** (ΣDM⁺, ΣDM⁻, ΣTR) over `xs` (NEWEST FIRST) in the batch chain's
@@ -132,11 +76,45 @@ object AdxState {
     (s, n)
   }
 
+  private[streaming] def fold(key: String, start: Option[AdxCarry],
+      rows: Iterator[OhlcRow]): (Option[AdxCarry], Iterator[AdxRow]) = {
+    import graft.operators.TimeSeries.AdxSpan
+    var c = start
+    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
+      val term = c match {
+        case None => AdxTerm(has = false, 0.0, 0.0, 0.0)
+        case Some(AdxCarry(_, _, p)) =>
+          val up = r.high - p.high
+          val dn = p.low - r.low
+          AdxTerm(has = true,
+            if (up > dn && up > 0.0) up else 0.0,
+            if (dn > up && dn > 0.0) dn else 0.0,
+            math.max(math.max(r.high - r.low, math.abs(r.high - p.close)),
+              math.abs(r.low - p.close)))
+      }
+      val ts = (term :: c.fold(List.empty[AdxTerm])(_.terms)).take(AdxSpan)
+      val (sp, sm, st) = chainFold(ts, AdxSpan)
+      val di: Option[(Double, Double)] =
+        if (st == 0.0) None else Some((100.0 * sp / st, 100.0 * sm / st))
+      val dx: Option[Double] = di.flatMap { case (pdi, mdi) =>
+        if (pdi + mdi == 0.0) None
+        else Some(100.0 * math.abs(pdi - mdi) / (pdi + mdi))
+      }
+      val ds = (DxTerm(dx.isDefined, dx.getOrElse(0.0)) ::
+        c.fold(List.empty[DxTerm])(_.dxs)).take(AdxSpan)
+      c = Some(AdxCarry(ts, ds, AdxPrevBar(r.high, r.low, r.close)))
+      val (sdx, ndx) = dxFold(ds, AdxSpan)
+      AdxRow(key, r.window_timestamp,
+        di.map(d => round6(d._1)), di.map(d => round6(d._2)),
+        dx.map(round6),
+        if (ndx > 0L) Some(round6(sdx / ndx)) else None)
+    }
+    (c, out.iterator)
+  }
+
   /** Attach streaming ADX (stream or batch input). */
   def attach(bars: Dataset[OhlcRow]): Dataset[AdxRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new AdxProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

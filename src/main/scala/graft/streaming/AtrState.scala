@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One 5-minute OHLC bar on the stream (the
   * [[graft.operators.StockPipeline.ohlc5m]] columns the ATR kernel
@@ -16,14 +15,16 @@ case class OhlcRow(ticker: String, window_timestamp: Timestamp,
 case class AtrRow(ticker: String, window_timestamp: Timestamp,
     tr: Double, atr_14: Double)
 
-/** Streaming ATR on `transformWithState`: per ticker, the previous
-  * close and the last [[graft.operators.TimeSeries.AtrSpan]] true
-  * ranges live in a `ValueState` + `ListState` — CONSTANT state per
-  * key regardless of stream length — and each arriving bar emits the
-  * same trailing-mean ATR as the batch lag-chain kernel. Second proof
+/** The ATR carry: the last [[graft.operators.TimeSeries.AtrSpan]] true
+  * ranges (NEWEST FIRST) and the previous close. */
+case class AtrCarry(trs: List[Double], prevClose: Double)
+
+/** Streaming ATR: per ticker an [[AtrCarry]] — CONSTANT state per key
+  * regardless of stream length — and each arriving bar emits the same
+  * trailing-mean ATR as the batch lag-chain kernel. Second proof
   * (after [[MacdState]]) that the generated-lag-chain indicator family
-  * is mechanically twinnable: any kernel whose batch form is a
-  * bounded lag-chain fold maps to a bounded ListState fold.
+  * is mechanically twinnable: any kernel whose batch form is a bounded
+  * lag-chain fold maps to a bounded keyed fold.
   *
   * Bit-parity argument (spec-asserted): the true range uses the same
   * double ops as the batch `greatest` (max of exact subtractions);
@@ -31,44 +32,6 @@ case class AtrRow(ticker: String, window_timestamp: Timestamp,
   * `reduce(_ + _)` textual order with the same literal 0.0 for
   * missing lags, and the final division divides the double numerator
   * by the long count exactly as the codegen'd `num / den`. */
-class AtrProcessor extends StatefulProcessor[String, OhlcRow, AtrRow] {
-
-  @transient private var trs: ListState[Double] = _
-  @transient private var prevClose: ValueState[Double] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    trs = getHandle.getListState[Double]("atr_trs",
-      Encoders.scalaDouble, TTLConfig.NONE)
-    prevClose = getHandle.getValueState[Double]("atr_prev_close",
-      Encoders.scalaDouble, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[AtrRow] = {
-    import graft.operators.TimeSeries.AtrSpan
-    var ts: List[Double] = if (trs.exists()) trs.get().toList else Nil
-    var pc: Option[Double] =
-      if (prevClose.exists()) Some(prevClose.get()) else None
-    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
-      val tr = pc match {
-        case None => r.high - r.low
-        case Some(p) => math.max(math.max(r.high - r.low,
-          math.abs(r.high - p)), math.abs(r.low - p))
-      }
-      ts = (tr :: ts).take(AtrSpan)
-      pc = Some(r.close)
-      AtrRow(key, r.window_timestamp,
-        MacdState.round6(tr),
-        MacdState.round6(AtrState.trailingMean(ts, AtrSpan)))
-    }
-    trs.put(ts.toArray)
-    // pc is None only when the row iterator was empty AND no prior state
-    // exists (e.g. a future timer-driven invocation) — nothing to write
-    pc.foreach(prevClose.update)
-    out.iterator
-  }
-}
-
 object AtrState {
 
   /** Trailing mean over `xs` (NEWEST FIRST): numerator and count
@@ -93,11 +56,27 @@ object AtrState {
     num / den
   }
 
+  private[streaming] def fold(key: String, start: Option[AtrCarry],
+      rows: Iterator[OhlcRow]): (Option[AtrCarry], Iterator[AtrRow]) = {
+    import graft.operators.TimeSeries.AtrSpan
+    var c = start
+    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
+      val tr = c match {
+        case None => r.high - r.low
+        case Some(p) => math.max(math.max(r.high - r.low,
+          math.abs(r.high - p.prevClose)), math.abs(r.low - p.prevClose))
+      }
+      val ts = (tr :: c.fold(List.empty[Double])(_.trs)).take(AtrSpan)
+      c = Some(AtrCarry(ts, r.close))
+      AtrRow(key, r.window_timestamp, round6(tr),
+        round6(trailingMean(ts, AtrSpan)))
+    }
+    (c, out.iterator)
+  }
+
   /** Attach streaming ATR (stream or batch input). */
   def attach(bars: Dataset[OhlcRow]): Dataset[AtrRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new AtrProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

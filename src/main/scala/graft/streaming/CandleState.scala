@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One OHLC bar entering streaming pattern detection. */
 case class OhlcBar(ticker: String, window_timestamp: Timestamp,
@@ -27,12 +26,8 @@ case class PatternRow(ticker: String, window_timestamp: Timestamp,
   * batch operator states. */
 object CandleState {
 
-  private def usOf(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  /** Pure carry fold, shared with tests. */
-  private[streaming] def fold(start: Option[PrevBar],
-      rows: Iterator[OhlcBar]): (Option[PrevBar], Seq[PatternRow]) = {
+  private[streaming] def fold(ticker: String, start: Option[PrevBar],
+      rows: Iterator[OhlcBar]): (Option[PrevBar], Iterator[PatternRow]) = {
     var carry = start
     val out = Seq.newBuilder[PatternRow]
     rows.toSeq.sortBy(b => usOf(b.window_timestamp)).foreach { b =>
@@ -50,23 +45,14 @@ object CandleState {
         carry = Some(PrevBar(t, b.open, b.close))
       }
     }
-    (carry, out.result())
-  }
-
-  def transition(ticker: String, rows: Iterator[OhlcBar],
-      state: GroupState[PrevBar]): Iterator[PatternRow] = {
-    val (carry, out) = fold(state.getOption, rows)
-    carry.foreach(state.update)
-    out.iterator
+    (carry, out.result().iterator)
   }
 
   /** Attach pattern flagging to a watermarked stream of OHLC bars. */
   def patterns(bars: Dataset[OhlcBar],
       delay: String = "0 seconds"): Dataset[PatternRow] = {
     import bars.sparkSession.implicits._
-    bars.withWatermark("window_timestamp", delay)
-      .groupByKey(_.ticker)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(transition _)
+    KeyedFold(bars.withWatermark("window_timestamp", delay),
+      (b: OhlcBar) => b.ticker)(fold)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar CCI emission — schema matches the batch
   * [[graft.operators.TimeSeries.cciOhlc]] output. */
@@ -11,11 +10,11 @@ case class CciRow(ticker: String, window_timestamp: Timestamp,
     tp: Double, tp_sma: Double, mean_dev: Double,
     cci_20: Option[Double])
 
-/** Streaming CCI on `transformWithState`: per ticker the last
-  * [[graft.operators.TimeSeries.CciSpan]] typical prices live in ONE
-  * `ListState` — both batch chain tiers (the sma chain AND the
-  * mean-deviation chain against the CURRENT sma) read the same
-  * lag(tp, i) values, so one deque feeds both folds.
+/** Streaming CCI: per ticker the carry is the last
+  * [[graft.operators.TimeSeries.CciSpan]] typical prices, NEWEST FIRST
+  * — both batch chain tiers (the sma chain AND the mean-deviation
+  * chain against the CURRENT sma) read the same lag(tp, i) values, so
+  * one list feeds both folds.
   *
   * Bit-parity argument (spec-asserted): tp = (H+L+C)/3 is the same
   * double expression; both folds accumulate in the batch textual
@@ -23,19 +22,12 @@ case class CciRow(ticker: String, window_timestamp: Timestamp,
   * subtracts the fold-computed sma exactly as the batch level-2
   * chain references the level-1 column; zero mean deviation → None
   * via the same ≠0 guard. */
-class CciProcessor extends StatefulProcessor[String, OhlcRow, CciRow] {
+object CciState {
 
-  @transient private var tps: ListState[Double] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    tps = getHandle.getListState[Double]("cci_tps",
-      Encoders.scalaDouble, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[CciRow] = {
+  private[streaming] def fold(key: String, start: Option[List[Double]],
+      rows: Iterator[OhlcRow]): (Option[List[Double]], Iterator[CciRow]) = {
     import graft.operators.TimeSeries.CciSpan
-    var ts: List[Double] = if (tps.exists()) tps.get().toList else Nil
+    var ts = start.getOrElse(Nil)
     val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
       val tp = (r.high + r.low + r.close) / 3.0
       ts = (tp :: ts).take(CciSpan)
@@ -56,23 +48,15 @@ class CciProcessor extends StatefulProcessor[String, OhlcRow, CciRow] {
         i += 1
       }
       val md = d / n
-      CciRow(key, r.window_timestamp,
-        MacdState.round6(tp), MacdState.round6(sma), MacdState.round6(md),
-        if (md == 0.0) None
-        else Some(MacdState.round6((tp - sma) / (0.015 * md))))
+      CciRow(key, r.window_timestamp, round6(tp), round6(sma), round6(md),
+        if (md == 0.0) None else Some(round6((tp - sma) / (0.015 * md))))
     }
-    tps.put(ts.toArray)
-    out.iterator
+    (Some(ts), out.iterator)
   }
-}
-
-object CciState {
 
   /** Attach streaming CCI (stream or batch input). */
   def attach(bars: Dataset[OhlcRow]): Dataset[CciRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new CciProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.math.{BigDecimal => JBD, RoundingMode}
+import java.math.{BigDecimal => JBD}
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Per-trigger Corwin–Schultz report — schema matches the batch
   * `corwinSchultzOhlc` output row; the newest (highest `n_pairs`)
@@ -12,58 +11,25 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
 case class CsRow(ticker: String, n_pairs: Long, avg_spread_raw: Double,
     avg_spread: Double)
 
-/** Streaming Corwin–Schultz spread estimator on `transformWithState` —
-  * the twin of the batch `corwinSchultzOhlc` kernel
-  * (`operators/TimeSeries.scala`), bit-identical across any trigger
-  * split (spec-asserted).
+/** The Corwin–Schultz carry: the previous bar's high/low, the pair
+  * count, and the two exact DECIMAL(38,18) spread sums as plain
+  * strings. */
+case class CsCarry(prevHigh: Double, prevLow: Double, nPairs: Long,
+    sumRaw: String, sumFloored: String)
+
+/** Streaming Corwin–Schultz spread estimator — the twin of the batch
+  * `corwinSchultzOhlc` kernel (`operators/TimeSeries.scala`),
+  * bit-identical across any trigger split (spec-asserted).
   *
   * Unlike [[CusumState]] (inherently two-pass, series-sized state),
   * the CS estimator is a clean ONE-PASS fold: each bar pairs only with
   * its predecessor, and the per-ticker report is two decimal sums plus
-  * a count — so the state is CONSTANT (previous bar's high/low + two
-  * exact DECIMAL(38,18) accumulators of 1e-12-grid spread terms + the
-  * pair count) at any stream length. Every per-pair double op runs in
-  * the batch kernel's textual order; the accumulators are the same
+  * a count — so the [[CsCarry]] is CONSTANT (previous bar's high/low +
+  * two exact DECIMAL(38,18) accumulators of 1e-12-grid spread terms +
+  * the pair count) at any stream length. Every per-pair double op runs
+  * in the batch kernel's textual order; the accumulators are the same
   * shortest-repr decimal grid as the batch `dsum18(round(s, 12))`, so
   * stream and batch reports agree bit-for-bit. */
-class CorwinSchultzProcessor
-    extends StatefulProcessor[String, OhlcRow, CsRow] {
-
-  // (prevHigh, prevLow, nPairs, sumRaw scale-18 string, sumFloored)
-  @transient private var st:
-    ValueState[(Double, Double, Long, String, String)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Double, Double, Long, String, String)](
-      "cs_state", Encoders.kryo[(Double, Double, Long, String, String)],
-      TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[CsRow] = {
-    var (ph, pl, n, rawS, flS) =
-      if (st.exists()) st.get()
-      else (Double.NaN, Double.NaN, 0L, "0", "0")
-    var raw = new JBD(rawS)
-    var fl = new JBD(flS)
-    rows.toSeq.sortBy(_.window_timestamp.getTime).foreach { b =>
-      if (!ph.isNaN && pl > 0.0 && b.low > 0.0) {
-        val s = CorwinSchultzState.pairSpread(ph, pl, b.high, b.low)
-        n += 1
-        raw = raw.add(CorwinSchultzState.dec18(
-          CorwinSchultzState.round12(s)))
-        fl = fl.add(CorwinSchultzState.dec18(
-          CorwinSchultzState.round12(math.max(s, 0.0))))
-      }
-      ph = b.high; pl = b.low
-    }
-    st.update((ph, pl, n, raw.toPlainString, fl.toPlainString))
-    if (n == 0) Iterator.empty
-    else Iterator.single(CsRow(key, n,
-      MacdState.round6(raw.doubleValue / n),
-      MacdState.round6(fl.doubleValue / n)))
-  }
-}
-
 object CorwinSchultzState {
 
   private val K = 3.0 - 2.0 * math.sqrt(2.0)
@@ -86,17 +52,31 @@ object CorwinSchultzState {
   private[streaming] def round12(x: Double): Double =
     BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** double → DECIMAL(38,18) through the shortest repr — the
-    * engine-wide decimal-grid convention ([[CusumState.dec18]]). */
-  private[streaming] def dec18(x: Double): JBD =
-    new JBD(java.lang.Double.toString(x)).setScale(18, RoundingMode.HALF_UP)
+  private[streaming] def fold(key: String, start: Option[CsCarry],
+      rows: Iterator[OhlcRow]): (Option[CsCarry], Iterator[CsRow]) = {
+    val c0 = start.getOrElse(CsCarry(Double.NaN, Double.NaN, 0L, "0", "0"))
+    var (ph, pl, n) = (c0.prevHigh, c0.prevLow, c0.nPairs)
+    var raw = new JBD(c0.sumRaw)
+    var fl = new JBD(c0.sumFloored)
+    rows.toSeq.sortBy(_.window_timestamp.getTime).foreach { b =>
+      if (!ph.isNaN && pl > 0.0 && b.low > 0.0) {
+        val s = pairSpread(ph, pl, b.high, b.low)
+        n += 1
+        raw = raw.add(dec18(round12(s)))
+        fl = fl.add(dec18(round12(math.max(s, 0.0))))
+      }
+      ph = b.high; pl = b.low
+    }
+    (Some(CsCarry(ph, pl, n, raw.toPlainString, fl.toPlainString)),
+      if (n == 0) Iterator.empty
+      else Iterator.single(CsRow(key, n, round6(raw.doubleValue / n),
+        round6(fl.doubleValue / n))))
+  }
 
   /** Attach the streaming CS estimator (stream or batch input; the
     * `close` field of [[OhlcRow]] is unused). */
   def attach(bars: Dataset[OhlcRow]): Dataset[CsRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new CorwinSchultzProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.math.{BigDecimal => JBD, RoundingMode}
+import java.math.{BigDecimal => JBD}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One 5-minute close bar on the stream (the
   * [[graft.operators.TimeSeries]] `closeBars5m` grain the CUSUM kernel
@@ -19,17 +18,20 @@ case class CusumBar(ticker: String, bucket: Timestamp, close: Double)
 case class CusumRow(ticker: String, n_rets: Long, break_bucket: Timestamp,
     cusum_max: Double, cusum_stat: Option[Double])
 
-/** Streaming CUSUM change-point screen on `transformWithState` — the
-  * twin of the batch `cusumBars` kernel
-  * (`operators/TimeSeries.scala`), bit-identical across any trigger
-  * split (spec-asserted).
+/** The CUSUM carry: the return series so far, NEWEST FIRST, as
+  * (bucket ms, r) pairs, and the previous close. */
+case class CusumCarry(series: List[(Long, Double)], prevClose: Double)
+
+/** Streaming CUSUM change-point screen — the twin of the batch
+  * `cusumBars` kernel (`operators/TimeSeries.scala`), bit-identical
+  * across any trigger split (spec-asserted).
   *
   * Unlike the bounded-lag indicator twins ([[MacdState]],
   * [[AtrState]], [[StochState]]), CUSUM is inherently TWO-PASS: every
   * excursion term is (rᵢ − μ) under the FINAL mean μ, and the batch
   * kernel rounds each term double→DECIMAL(38,18) individually — so S_t
   * cannot be folded online as P_t − t·μ (the per-term rounding depends
-  * on μ). The state is therefore the per-ticker RETURN SERIES itself
+  * on μ). The carry therefore holds the per-ticker RETURN SERIES itself
   * (one (bucket, r) pair per 5-minute bar — bar-grain, never
   * event-grain), and each trigger REPLAYS the batch kernel over it:
   *   - r = close/prev − 1 (double, prev ≠ 0 guard) at ingest — the
@@ -44,50 +46,10 @@ case class CusumRow(ticker: String, n_rets: Long, break_bucket: Timestamp,
   *     NULL on σ = 0).
   * Production sizing: a per-ticker day holds 288 bars, so state is KB
   * per key; an unbounded-horizon deployment would window the screen
-  * (per-session/day CUSUM) or age the list with a TTL — the replay
-  * cost per trigger is O(bars so far), which is exactly the batch
-  * kernel's own cost over the same prefix. */
-class CusumProcessor extends StatefulProcessor[String, CusumBar, CusumRow] {
-
-  @transient private var series: ListState[(Long, Double)] = _
-  @transient private var prevClose: ValueState[Double] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    series = getHandle.getListState[(Long, Double)]("cusum_series",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble), TTLConfig.NONE)
-    prevClose = getHandle.getValueState[Double]("cusum_prev_close",
-      Encoders.scalaDouble, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[CusumBar],
-      timerValues: TimerValues): Iterator[CusumRow] = {
-    var ser: List[(Long, Double)] =
-      if (series.exists()) series.get().toList else Nil
-    var pc: Option[Double] =
-      if (prevClose.exists()) Some(prevClose.get()) else None
-    rows.toSeq.sortBy(_.bucket.getTime).foreach { b =>
-      pc match {
-        // simpleRets: when(prev =!= 0.0, close/prev − 1), NULLs dropped
-        case Some(p) if p != 0.0 =>
-          ser = (b.bucket.getTime, b.close / p - 1.0) :: ser
-        case _ => ()
-      }
-      pc = Some(b.close)
-    }
-    series.put(ser.toArray)
-    pc.foreach(prevClose.update)
-    if (ser.isEmpty) Iterator.empty
-    else Iterator.single(CusumState.report(key, ser.reverse))
-  }
-}
-
+  * (per-session/day CUSUM) or age the list — the replay cost per
+  * trigger is O(bars so far), which is exactly the batch kernel's own
+  * cost over the same prefix. */
 object CusumState {
-
-  /** double → DECIMAL(38,18): Spark casts through the SHORTEST decimal
-    * repr of the double (`Double.toString`), then HALF_UP to scale 18 —
-    * the engine-wide decimal-grid convention. */
-  private[streaming] def dec18(x: Double): JBD =
-    new JBD(java.lang.Double.toString(x)).setScale(18, RoundingMode.HALF_UP)
 
   /** The batch `cusumBars` kernel replayed over one ticker's return
     * series (bucket-ascending), term-for-term in the batch textual
@@ -116,17 +78,31 @@ object CusumState {
     }
     val sm = sMax.doubleValue
     val stat =
-      if (sd > 0.0) Some(MacdState.round6(sm / (sd * math.sqrt(nd))))
-      else None
-    CusumRow(ticker, n.toLong, new Timestamp(breakBucket),
-      MacdState.round6(sm), stat)
+      if (sd > 0.0) Some(round6(sm / (sd * math.sqrt(nd)))) else None
+    CusumRow(ticker, n.toLong, new Timestamp(breakBucket), round6(sm), stat)
+  }
+
+  private[streaming] def fold(key: String, start: Option[CusumCarry],
+      rows: Iterator[CusumBar]): (Option[CusumCarry], Iterator[CusumRow]) = {
+    var ser = start.fold(List.empty[(Long, Double)])(_.series)
+    var pc = start.map(_.prevClose)
+    rows.toSeq.sortBy(_.bucket.getTime).foreach { b =>
+      pc match {
+        // simpleRets: when(prev =!= 0.0, close/prev − 1), NULLs dropped
+        case Some(p) if p != 0.0 =>
+          ser = (b.bucket.getTime, b.close / p - 1.0) :: ser
+        case _ => ()
+      }
+      pc = Some(b.close)
+    }
+    (pc.map(CusumCarry(ser, _)),
+      if (ser.isEmpty) Iterator.empty
+      else Iterator.single(report(key, ser.reverse)))
   }
 
   /** Attach the streaming CUSUM screen (stream or batch input). */
   def attach(bars: Dataset[CusumBar]): Dataset[CusumRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new CusumProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (b: CusumBar) => b.ticker)(fold)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar Donchian emission — schema matches the batch
   * [[graft.operators.TimeSeries.donchianOhlc]] output. */
@@ -13,11 +12,11 @@ case class DonchianRow(ticker: String, window_timestamp: Timestamp,
 /** One (high, low) bar extreme pair kept in Donchian state. */
 case class HlPair(high: Double, low: Double)
 
-/** Streaming Donchian channel on `transformWithState`: per ticker the
-  * last [[graft.operators.TimeSeries.DonchianSpan]] (high, low) pairs
-  * live in one `ListState` — CONSTANT state per key — and each
-  * arriving bar emits the same trailing highest-high / lowest-low
-  * channel as the batch `greatest`/`least` lag-chain kernel.
+/** Streaming Donchian channel: per ticker the carry is the last
+  * [[graft.operators.TimeSeries.DonchianSpan]] (high, low) pairs, most
+  * recent first — CONSTANT state per key — and each arriving bar emits
+  * the same trailing highest-high / lowest-low channel as the batch
+  * `greatest`/`least` lag-chain kernel.
   *
   * Bit-parity argument (spec-asserted): max/min over a bounded set of
   * exact stored doubles is ORDER-INSENSITIVE (prices are never NaN —
@@ -26,40 +25,25 @@ case class HlPair(high: Double, low: Double)
   * the batch `(dcu + dcd) / 2.0`; the leading edge needs no special
   * case — lag 0 is the current bar on both sides, so the extreme set
   * is never empty. */
-class DonchianProcessor
-    extends StatefulProcessor[String, OhlcRow, DonchianRow] {
+object DonchianState {
 
-  @transient private var hls: ListState[HlPair] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    hls = getHandle.getListState[HlPair]("donchian_hl",
-      Encoders.product[HlPair], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[DonchianRow] = {
+  private[streaming] def fold(key: String, start: Option[List[HlPair]],
+      rows: Iterator[OhlcRow]): (Option[List[HlPair]], Iterator[DonchianRow]) = {
     import graft.operators.TimeSeries.DonchianSpan
-    var hs: List[HlPair] = if (hls.exists()) hls.get().toList else Nil
+    var hs = start.getOrElse(Nil)
     val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
       hs = (HlPair(r.high, r.low) :: hs).take(DonchianSpan)
       val up = hs.iterator.map(_.high).max
       val dn = hs.iterator.map(_.low).min
       DonchianRow(key, r.window_timestamp, r.close,
-        MacdState.round6(up), MacdState.round6(dn),
-        MacdState.round6((up + dn) / 2.0))
+        round6(up), round6(dn), round6((up + dn) / 2.0))
     }
-    hls.put(hs.toArray)
-    out.iterator
+    (Some(hs), out.iterator)
   }
-}
-
-object DonchianState {
 
   /** Attach streaming Donchian (stream or batch input). */
   def attach(bars: Dataset[OhlcRow]): Dataset[DonchianRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new DonchianProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One sparse close bar entering streaming gap-fill. */
 case class BarEvent(ticker: String, bucket: Timestamp, close: Double)
@@ -18,15 +17,15 @@ case class GapCarry(lastUs: Long, lastClose: Double)
 case class GapfillRow(ticker: String, bucket: Timestamp,
     filled_close: Double, gap_filled: Boolean)
 
-/** Streaming gap-fill as explicit keyed state — the
-  * `flatMapGroupsWithState` twin of the batch dense-spine +
-  * forward-fill query. Each arriving bar emits the gap buckets between
-  * the carry and itself (flagged, carrying the previous close forward)
-  * followed by the real bar; the carry then advances. The emitted row
-  * set is EXACTLY the batch spine: the batch version materializes
-  * per-ticker [min, max] and back-fills, the streaming version grows
-  * the same spine incrementally as the max advances — no timeout
-  * machinery needed, because the spine's right edge IS the newest bar.
+/** Streaming gap-fill as explicit keyed state — the keyed-fold twin of
+  * the batch dense-spine + forward-fill query. Each arriving bar emits
+  * the gap buckets between the carry and itself (flagged, carrying the
+  * previous close forward) followed by the real bar; the carry then
+  * advances. The emitted row set is EXACTLY the batch spine: the batch
+  * version materializes per-ticker [min, max] and back-fills, the
+  * streaming version grows the same spine incrementally as the max
+  * advances — no timeout machinery needed, because the spine's right
+  * edge IS the newest bar, so there is nothing left to flush at idle.
   *
   * Late discipline: a bar at or behind the carry is dropped — its
   * bucket has already been emitted (possibly as a gap). That is the
@@ -42,19 +41,9 @@ object GapfillState {
   /** 5-minute buckets, shared with the batch twin. */
   val stepUs: Long = 5L * 60L * 1000000L
 
-  private def usOf(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  private def tsOf(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
-  /** The pure carry fold: sorted bars → surviving carry + emitted rows.
-    * Shared by the streaming transition and direct unit tests. */
-  private[streaming] def fold(start: Option[GapCarry],
-      rows: Iterator[BarEvent]): (Option[GapCarry], Seq[GapfillRow]) = {
+  /** The carry fold: sorted bars → surviving carry + emitted rows. */
+  private[streaming] def fold(ticker: String, start: Option[GapCarry],
+      rows: Iterator[BarEvent]): (Option[GapCarry], Iterator[GapfillRow]) = {
     var carry = start
     val out = Seq.newBuilder[GapfillRow]
     rows.toSeq.sortBy(b => usOf(b.bucket)).foreach { b =>
@@ -75,25 +64,13 @@ object GapfillState {
           carry = Some(GapCarry(t, b.close))
       }
     }
-    (carry, out.result())
-  }
-
-  /** Per-key transition. No timeout path: the spine's right edge is the
-    * newest real bar, so there is nothing left to flush at idle. */
-  def transition(ticker: String, rows: Iterator[BarEvent],
-      state: GroupState[GapCarry]): Iterator[GapfillRow] = {
-    val (carry, out) = fold(state.getOption, rows)
-    carry.foreach(state.update)
-    out.iterator
+    (carry, out.result().iterator)
   }
 
   /** Attach gap-fill to a watermarked stream of sparse bars. */
   def gapfill(bars: Dataset[BarEvent],
       delay: String = "0 seconds"): Dataset[GapfillRow] = {
     import bars.sparkSession.implicits._
-    bars.withWatermark("bucket", delay)
-      .groupByKey(_.ticker)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(transition _)
+    KeyedFold(bars.withWatermark("bucket", delay), (b: BarEvent) => b.ticker)(fold)
   }
 }

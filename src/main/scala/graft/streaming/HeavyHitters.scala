@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
 /** One tracked entry of the space-saving summary: estimated count and
   * the maximum overestimation error inherited at insertion. */
@@ -18,11 +17,11 @@ case class HhEvent(user_id: Long)
 
 /** Streaming heavy hitters via the space-saving algorithm (Metwally,
   * Agrawal, El Abbadi 2005 — "Efficient computation of frequent and
-  * top-k elements in data streams") on Spark 4's `transformWithState`:
-  * each shard tracks at most [[HeavyHitters.capacity]] candidate keys;
-  * an unseen key arriving at a full summary EVICTS the minimum-count
-  * entry and inherits its count as the new entry's error bound. The
-  * classic guarantees hold per shard: any key with true count >
+  * top-k elements in data streams") as a keyed fold: each shard's carry
+  * tracks at most [[HeavyHitters.capacity]] candidate keys; an unseen
+  * key arriving at a full summary EVICTS the minimum-count entry and
+  * inherits its count as the new entry's error bound. The classic
+  * guarantees hold per shard: any key with true count >
   * N_shard / capacity is present, and for every tracked key
   * `est − err ≤ true ≤ est`.
   *
@@ -32,41 +31,11 @@ case class HhEvent(user_id: Long)
   * CONSTANT `capacity` entries regardless of stream volume — the whole
   * operator's state is shards × capacity rows, the property that lets
   * it run forever at any event rate. Eviction ties break
-  * deterministically by (count, user_id).
+  * deterministically by (count, user_id); events fold in arrival
+  * order.
   *
-  * Like the other TWS twins, the same operator body runs in batch mode
-  * for the parity spec — no state store needed there. */
-class HeavyHittersProcessor(capacity: Int)
-    extends StatefulProcessor[Long, HhEvent, HhRow] {
-
-  @transient private var summary: ValueState[Map[Long, HhEntry]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    summary = getHandle.getValueState[Map[Long, HhEntry]]("hh_summary",
-      Encoders.kryo[Map[Long, HhEntry]], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[HhEvent],
-      timerValues: TimerValues): Iterator[HhRow] = {
-    var m: Map[Long, HhEntry] =
-      if (summary.exists()) summary.get() else Map.empty
-    rows.foreach { e =>
-      m.get(e.user_id) match {
-        case Some(cur) =>
-          m = m.updated(e.user_id, cur.copy(est_count = cur.est_count + 1))
-        case None if m.size < capacity =>
-          m = m.updated(e.user_id, HhEntry(e.user_id, 1L, 0L))
-        case None =>
-          val victim = m.values.minBy(v => (v.est_count, v.user_id))
-          m = (m - victim.user_id).updated(e.user_id,
-            HhEntry(e.user_id, victim.est_count + 1, victim.est_count))
-      }
-    }
-    summary.update(m)
-    m.values.toSeq.sortBy(v => (-v.est_count, v.user_id))
-      .map(v => HhRow(key, v.user_id, v.est_count, v.max_err)).iterator
-  }
-}
-
+  * Like the other twins, the same fold runs in batch mode for the
+  * parity spec — no state store needed there. */
 object HeavyHitters {
 
   /** Summary capacity per shard (error bound: N_shard / capacity). */
@@ -75,13 +44,34 @@ object HeavyHitters {
   /** Disjoint hash shards — state is shards × capacity, constant. */
   val shards = 4
 
+  private[streaming] def fold(cap: Int)(shard: Long,
+      start: Option[Map[Long, HhEntry]],
+      rows: Iterator[HhEvent]): (Option[Map[Long, HhEntry]], Iterator[HhRow]) = {
+    var m = start.getOrElse(Map.empty[Long, HhEntry])
+    rows.foreach { e =>
+      m.get(e.user_id) match {
+        case Some(cur) =>
+          m = m.updated(e.user_id, cur.copy(est_count = cur.est_count + 1))
+        case None if m.size < cap =>
+          m = m.updated(e.user_id, HhEntry(e.user_id, 1L, 0L))
+        case None =>
+          val victim = m.values.minBy(v => (v.est_count, v.user_id))
+          m = (m - victim.user_id).updated(e.user_id,
+            HhEntry(e.user_id, victim.est_count + 1, victim.est_count))
+      }
+    }
+    (Some(m), m.values.toSeq.sortBy(v => (-v.est_count, v.user_id))
+      .map(v => HhRow(shard, v.user_id, v.est_count, v.max_err)).iterator)
+  }
+
   /** Attach space-saving tracking (stream or batch input). Emits each
     * shard's full current summary per trigger. */
   def track(events: Dataset[HhEvent],
       cap: Int = capacity): Dataset[HhRow] = {
     import events.sparkSession.implicits._
-    events.groupByKey(e => math.floorMod(e.user_id, shards.toLong))
-      .transformWithState(new HeavyHittersProcessor(cap),
-        TimeMode.None(), OutputMode.Append())
+    implicit val summary: Encoder[Map[Long, HhEntry]] =
+      Encoders.kryo[Map[Long, HhEntry]]
+    KeyedFold(events, (e: HhEvent) => math.floorMod(e.user_id, shards.toLong))(
+      fold(cap))
   }
 }

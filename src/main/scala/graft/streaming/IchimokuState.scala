@@ -2,13 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar Ichimoku emission — schema matches the batch
   * [[graft.operators.TimeSeries.ichimokuBars]] output for the rows
-  * whose chikou exists (see [[IchimokuProcessor]] on emission
-  * timing). */
+  * whose chikou exists (see [[IchimokuState]] on emission timing). */
 case class IchiRow(ticker: String, bucket: Timestamp, tenkan: Double,
     kijun: Double, senkou_a: Option[Double], senkou_b: Option[Double],
     chikou: Double)
@@ -17,10 +15,10 @@ case class IchiRow(ticker: String, bucket: Timestamp, tenkan: Double,
 case class IchiPending(bucket: Timestamp, close: Double,
     tenkan0: Double, kijun0: Double, senkouB0: Double)
 
-/** Streaming Ichimoku on `transformWithState`: per ticker ONE
-  * `ListState` holds the last 2·[[graft.operators.TimeSeries.IchiKijun]]+1
-  * midline snapshots (which embeds the close history the midlines
-  * need) — CONSTANT state per key.
+/** Streaming Ichimoku: per ticker the carry is the last
+  * 2·[[graft.operators.TimeSeries.IchiKijun]]+1 midline snapshots,
+  * NEWEST FIRST (which embeds the close history the midlines need) —
+  * CONSTANT state per key.
   *
   * Ichimoku is the one indicator in the roster with a FORWARD
   * reference: a bar's chikou is the close 26 bars AHEAD, so its row is
@@ -37,21 +35,13 @@ case class IchiPending(bucket: Timestamp, close: Double,
   * max over what exists); senkou A/B are the midlines computed 26 bars
   * back — read from the snapshot queue, not recomputed, so they carry
   * the exact doubles the batch `lag` reads; rounding is the shared
-  * [[MacdState.round6]] HALF_UP twin. */
-class IchimokuProcessor
-    extends StatefulProcessor[String, BarRow, IchiRow] {
+  * HALF_UP `round6` twin. */
+object IchimokuState {
 
-  @transient private var pend: ListState[IchiPending] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    pend = getHandle.getListState[IchiPending]("ichi_pending",
-      Encoders.product[IchiPending], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[BarRow],
-      timerValues: TimerValues): Iterator[IchiRow] = {
+  private[streaming] def fold(key: String, start: Option[List[IchiPending]],
+      rows: Iterator[BarRow]): (Option[List[IchiPending]], Iterator[IchiRow]) = {
     import graft.operators.TimeSeries.{IchiKijun, IchiSenkouB, IchiTenkan}
-    var ps: List[IchiPending] = if (pend.exists()) pend.get().toList else Nil
+    var ps = start.getOrElse(Nil)
     val out = rows.toSeq.sortBy(_.bucket.getTime).flatMap { r =>
       val closes = (r.close :: ps.map(_.close)).take(IchiSenkouB)
       def mid(n: Int) = {
@@ -64,25 +54,18 @@ class IchimokuProcessor
         val e = ps(IchiKijun) // bar t−26: its chikou is THIS bar's close
         val back = // bar t−52: the senkou source e's lag-26 reads
           if (ps.length > 2 * IchiKijun) Some(ps(2 * IchiKijun)) else None
-        Some(IchiRow(key, e.bucket,
-          MacdState.round6(e.tenkan0), MacdState.round6(e.kijun0),
-          back.map(b => MacdState.round6((b.tenkan0 + b.kijun0) / 2.0)),
-          back.map(b => MacdState.round6(b.senkouB0)),
+        Some(IchiRow(key, e.bucket, round6(e.tenkan0), round6(e.kijun0),
+          back.map(b => round6((b.tenkan0 + b.kijun0) / 2.0)),
+          back.map(b => round6(b.senkouB0)),
           r.close))
       } else None
     }
-    pend.put(ps.toArray)
-    out.iterator
+    (Some(ps), out.iterator)
   }
-}
-
-object IchimokuState {
 
   /** Attach streaming Ichimoku (stream or batch input). */
   def attach(bars: Dataset[BarRow]): Dataset[IchiRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new IchimokuProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: BarRow) => r.ticker)(fold)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar Keltner emission — schema matches the batch
   * [[graft.operators.TimeSeries.keltnerOhlc]] output. */
@@ -15,72 +14,22 @@ case class KeltnerRow(ticker: String, window_timestamp: Timestamp,
   * still occupies a lag slot in the ATR chain). */
 case class KeltTr(has: Boolean, tr: Double)
 
-/** Streaming Keltner channel on `transformWithState`: per ticker the
-  * previous close, the last [[graft.operators.TimeSeries.KeltSpan]]
-  * closes (for the weighted EMA mid chain) and the last
-  * [[graft.operators.TimeSeries.KeltAtrSpan]] true ranges live in a
-  * `ValueState` + two `ListState`s — the first WEIGHTED-chain twin:
-  * the fold multiplies each lag by the same `(1−α)^i` literal the
-  * batch codegen bakes in, in the same textual order.
+/** The Keltner carry: the last [[graft.operators.TimeSeries.KeltSpan]]
+  * closes and the last [[graft.operators.TimeSeries.KeltAtrSpan]] true
+  * ranges (both NEWEST FIRST), and the previous close. */
+case class KeltCarry(closes: List[Double], trs: List[KeltTr],
+    prevClose: Double)
+
+/** Streaming Keltner channel: per ticker a [[KeltCarry]] — the first
+  * WEIGHTED-chain twin: the fold multiplies each lag by the same
+  * `(1−α)^i` literal the batch codegen bakes in, in the same textual
+  * order.
   *
   * Bit-parity argument (spec-asserted): `math.pow(decay, i)` here and
   * in the batch kernel is the same JVM call at class-init time, so
   * the weights are the identical doubles; numerator/denominator and
   * ATR sum/count fold in batch term order; a zero ATR count (the
   * first bar) → None bands via the same guard. */
-class KeltnerProcessor
-    extends StatefulProcessor[String, OhlcRow, KeltnerRow] {
-
-  @transient private var closes: ListState[Double] = _
-  @transient private var trs: ListState[KeltTr] = _
-  @transient private var prevClose: ValueState[Double] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    closes = getHandle.getListState[Double]("kelt_closes",
-      Encoders.scalaDouble, TTLConfig.NONE)
-    trs = getHandle.getListState[KeltTr]("kelt_trs",
-      Encoders.product[KeltTr], TTLConfig.NONE)
-    prevClose = getHandle.getValueState[Double]("kelt_prev_close",
-      Encoders.scalaDouble, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[KeltnerRow] = {
-    import graft.operators.TimeSeries.{KeltSpan, KeltAtrSpan}
-    var cs: List[Double] = if (closes.exists()) closes.get().toList else Nil
-    var ts: List[KeltTr] = if (trs.exists()) trs.get().toList else Nil
-    var pc: Option[Double] =
-      if (prevClose.exists()) Some(prevClose.get()) else None
-    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
-      val tr = pc match {
-        case None => KeltTr(has = false, 0.0)
-        case Some(p) => KeltTr(has = true,
-          math.max(math.max(r.high - r.low, math.abs(r.high - p)),
-            math.abs(r.low - p)))
-      }
-      cs = (r.close :: cs).take(KeltSpan)
-      ts = (tr :: ts).take(KeltAtrSpan)
-      pc = Some(r.close)
-      val (num, den) = KeltnerState.emaFold(cs, KeltSpan)
-      val mid = num / den
-      val (asum, acnt) = KeltnerState.atrFold(ts, KeltAtrSpan)
-      val bands =
-        if (acnt == 0L) None
-        else {
-          val atr = asum / acnt
-          Some((MacdState.round6(mid + 2.0 * atr),
-            MacdState.round6(mid - 2.0 * atr)))
-        }
-      KeltnerRow(key, r.window_timestamp, r.close, MacdState.round6(mid),
-        bands.map(_._1), bands.map(_._2))
-    }
-    closes.put(cs.toArray)
-    trs.put(ts.toArray)
-    pc.foreach(prevClose.update)
-    out.iterator
-  }
-}
-
 object KeltnerState {
 
   private val alpha =
@@ -123,11 +72,38 @@ object KeltnerState {
     (s, n)
   }
 
+  private[streaming] def fold(key: String, start: Option[KeltCarry],
+      rows: Iterator[OhlcRow]): (Option[KeltCarry], Iterator[KeltnerRow]) = {
+    import graft.operators.TimeSeries.{KeltSpan, KeltAtrSpan}
+    var c = start
+    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
+      val tr = c match {
+        case None => KeltTr(has = false, 0.0)
+        case Some(p) => KeltTr(has = true,
+          math.max(math.max(r.high - r.low, math.abs(r.high - p.prevClose)),
+            math.abs(r.low - p.prevClose)))
+      }
+      val cs = (r.close :: c.fold(List.empty[Double])(_.closes)).take(KeltSpan)
+      val ts = (tr :: c.fold(List.empty[KeltTr])(_.trs)).take(KeltAtrSpan)
+      c = Some(KeltCarry(cs, ts, r.close))
+      val (num, den) = emaFold(cs, KeltSpan)
+      val mid = num / den
+      val (asum, acnt) = atrFold(ts, KeltAtrSpan)
+      val bands =
+        if (acnt == 0L) None
+        else {
+          val atr = asum / acnt
+          Some((round6(mid + 2.0 * atr), round6(mid - 2.0 * atr)))
+        }
+      KeltnerRow(key, r.window_timestamp, r.close, round6(mid),
+        bands.map(_._1), bands.map(_._2))
+    }
+    (c, out.iterator)
+  }
+
   /** Attach streaming Keltner (stream or batch input). */
   def attach(bars: Dataset[OhlcRow]): Dataset[KeltnerRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new KeltnerProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.Dataset
 
 /** One 5-minute close bar on the stream. */
 case class BarRow(ticker: String, bucket: Timestamp, close: Double)
@@ -13,12 +12,15 @@ case class BarRow(ticker: String, bucket: Timestamp, close: Double)
 case class MacdRow(ticker: String, bucket: Timestamp, close: Double,
     macd: Double, macd_signal: Double, macd_hist: Double)
 
-/** Streaming MACD on `transformWithState`: per ticker, the last
+/** The MACD carry, both lists NEWEST FIRST: the last
   * [[graft.operators.TimeSeries.MacdSlow]] closes and the last
-  * [[graft.operators.TimeSeries.MacdSignal]] raw MACD values live in
-  * two `ListState`s — CONSTANT state per key regardless of stream
-  * length — and each arriving bar emits the same truncated-EWMA
-  * fast/slow/signal values as the batch lag-chain kernels.
+  * [[graft.operators.TimeSeries.MacdSignal]] raw MACD values. */
+case class MacdCarry(closes: List[Double], macds: List[Double])
+
+/** Streaming MACD: per ticker a [[MacdCarry]] — CONSTANT state per key
+  * regardless of stream length — and each arriving bar emits the same
+  * truncated-EWMA fast/slow/signal values as the batch lag-chain
+  * kernels.
   *
   * Bit-parity argument (spec-asserted): [[MacdState.ewmaFold]]
   * accumulates `x·w` products and weights in the SAME left-to-right
@@ -26,40 +28,6 @@ case class MacdRow(ticker: String, bucket: Timestamp, close: Double,
   * JVM double operations in identical order — and missing lags
   * contribute the same literal 0.0, so stream and batch agree to the
   * bit, rounding and signed-zero guard included. */
-class MacdProcessor extends StatefulProcessor[String, BarRow, MacdRow] {
-
-  @transient private var closes: ListState[Double] = _
-  @transient private var macds: ListState[Double] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    closes = getHandle.getListState[Double]("macd_closes",
-      Encoders.scalaDouble, TTLConfig.NONE)
-    macds = getHandle.getListState[Double]("macd_raws",
-      Encoders.scalaDouble, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[BarRow],
-      timerValues: TimerValues): Iterator[MacdRow] = {
-    import graft.operators.TimeSeries.{MacdFast, MacdSignal, MacdSlow}
-    var cs: List[Double] = if (closes.exists()) closes.get().toList else Nil
-    var ms: List[Double] = if (macds.exists()) macds.get().toList else Nil
-    val out = rows.toSeq.sortBy(_.bucket.getTime).map { r =>
-      cs = (r.close :: cs).take(MacdSlow)
-      val raw = MacdState.ewmaFold(cs, MacdFast) -
-        MacdState.ewmaFold(cs, MacdSlow)
-      ms = (raw :: ms).take(MacdSignal)
-      val sig = MacdState.ewmaFold(ms, MacdSignal)
-      MacdRow(key, r.bucket, r.close,
-        MacdState.z(MacdState.round6(raw)),
-        MacdState.z(MacdState.round6(sig)),
-        MacdState.z(MacdState.round6(raw - sig)))
-    }
-    closes.put(cs.toArray)
-    macds.put(ms.toArray)
-    out.iterator
-  }
-}
-
 object MacdState {
 
   /** Truncated-EWMA over `xs` (NEWEST FIRST): num/den accumulated in
@@ -85,18 +53,25 @@ object MacdState {
     num / den
   }
 
-  /** Spark `round(x, 6)` twin: unsigned-BigDecimal HALF_UP. */
-  private[streaming] def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** The batch signed-zero guard: map −0.0 to +0.0. */
-  private[streaming] def z(x: Double): Double = if (x == 0.0) 0.0 else x
+  private[streaming] def fold(key: String, start: Option[MacdCarry],
+      rows: Iterator[BarRow]): (Option[MacdCarry], Iterator[MacdRow]) = {
+    import graft.operators.TimeSeries.{MacdFast, MacdSignal, MacdSlow}
+    var cs = start.fold(List.empty[Double])(_.closes)
+    var ms = start.fold(List.empty[Double])(_.macds)
+    val out = rows.toSeq.sortBy(_.bucket.getTime).map { r =>
+      cs = (r.close :: cs).take(MacdSlow)
+      val raw = ewmaFold(cs, MacdFast) - ewmaFold(cs, MacdSlow)
+      ms = (raw :: ms).take(MacdSignal)
+      val sig = ewmaFold(ms, MacdSignal)
+      MacdRow(key, r.bucket, r.close,
+        z(round6(raw)), z(round6(sig)), z(round6(raw - sig)))
+    }
+    (Some(MacdCarry(cs, ms)), out.iterator)
+  }
 
   /** Attach streaming MACD (stream or batch input). */
   def attach(bars: Dataset[BarRow]): Dataset[MacdRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new MacdProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: BarRow) => r.ticker)(fold)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One 5-minute OHLC+volume bar on the stream (the
   * [[graft.operators.StockPipeline.ohlc5m]] columns the MFI kernel
@@ -21,60 +20,22 @@ case class MfiRow(ticker: String, window_timestamp: Timestamp,
   * direction), `scored` marks bars with a prior bar. */
 case class MfiTerm(mfp: Double, mfm: Double, scored: Long)
 
-/** Streaming Money Flow Index on `transformWithState`: per ticker the
-  * previous typical price and the last
-  * [[graft.operators.TimeSeries.MfiSpan]] classified flow terms live
-  * in a `ValueState` + `ListState` — CONSTANT state per key — and
-  * each arriving bar emits the same volume-weighted flow ratio as
-  * the batch lag-chain kernel ([[RsiState]]'s recipe with the
-  * gain/loss classification replaced by tp-direction flow splitting
-  * and an integral scored counter).
+/** The MFI carry: the last [[graft.operators.TimeSeries.MfiSpan]]
+  * classified flow terms (NEWEST FIRST) and the previous typical
+  * price. */
+case class MfiCarry(terms: List[MfiTerm], prevTp: Double)
+
+/** Streaming Money Flow Index: per ticker an [[MfiCarry]] — CONSTANT
+  * state per key — and each arriving bar emits the same
+  * volume-weighted flow ratio as the batch lag-chain kernel
+  * ([[RsiState]]'s recipe with the gain/loss classification replaced
+  * by tp-direction flow splitting and an integral scored counter).
   *
   * Bit-parity argument (spec-asserted): tp = (H+L+C)/3 is the same
   * double expression; flows accumulate in the batch `reduce(_ + _)`
   * textual order with literal 0.0 for missing lags (a first bar's
   * zero flows are IN-band zeros on both sides — batch `otherwise
   * (0.0)`); zero total flow → None via the same divisor guard. */
-class MfiProcessor extends StatefulProcessor[String, MfiBarRow, MfiRow] {
-
-  @transient private var terms: ListState[MfiTerm] = _
-  @transient private var prevTp: ValueState[Double] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    terms = getHandle.getListState[MfiTerm]("mfi_terms",
-      Encoders.product[MfiTerm], TTLConfig.NONE)
-    prevTp = getHandle.getValueState[Double]("mfi_prev_tp",
-      Encoders.scalaDouble, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[MfiBarRow],
-      timerValues: TimerValues): Iterator[MfiRow] = {
-    import graft.operators.TimeSeries.MfiSpan
-    var ts: List[MfiTerm] = if (terms.exists()) terms.get().toList else Nil
-    var pt: Option[Double] =
-      if (prevTp.exists()) Some(prevTp.get()) else None
-    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
-      val tp = (r.high + r.low + r.close) / 3.0
-      val term = pt match {
-        case None => MfiTerm(0.0, 0.0, 0L)
-        case Some(p) => MfiTerm(
-          if (tp > p) tp * r.volume else 0.0,
-          if (tp < p) tp * r.volume else 0.0,
-          1L)
-      }
-      ts = (term :: ts).take(MfiSpan)
-      pt = Some(tp)
-      val (sp, sm, sn) = MfiState.flowFold(ts, MfiSpan)
-      MfiRow(key, r.window_timestamp, sn,
-        if (sp + sm == 0.0) None
-        else Some(MacdState.round6(100.0 * sp / (sp + sm))))
-    }
-    terms.put(ts.toArray)
-    pt.foreach(prevTp.update)
-    out.iterator
-  }
-}
-
 object MfiState {
 
   /** (ΣMF⁺, ΣMF⁻, Σscored) over `xs` (NEWEST FIRST) in the batch
@@ -96,11 +57,31 @@ object MfiState {
     (sp, sm, sn)
   }
 
+  private[streaming] def fold(key: String, start: Option[MfiCarry],
+      rows: Iterator[MfiBarRow]): (Option[MfiCarry], Iterator[MfiRow]) = {
+    import graft.operators.TimeSeries.MfiSpan
+    var c = start
+    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
+      val tp = (r.high + r.low + r.close) / 3.0
+      val term = c match {
+        case None => MfiTerm(0.0, 0.0, 0L)
+        case Some(p) => MfiTerm(
+          if (tp > p.prevTp) tp * r.volume else 0.0,
+          if (tp < p.prevTp) tp * r.volume else 0.0,
+          1L)
+      }
+      val ts = (term :: c.fold(List.empty[MfiTerm])(_.terms)).take(MfiSpan)
+      c = Some(MfiCarry(ts, tp))
+      val (sp, sm, sn) = flowFold(ts, MfiSpan)
+      MfiRow(key, r.window_timestamp, sn,
+        if (sp + sm == 0.0) None else Some(round6(100.0 * sp / (sp + sm))))
+    }
+    (c, out.iterator)
+  }
+
   /** Attach streaming MFI (stream or batch input). */
   def attach(bars: Dataset[MfiBarRow]): Dataset[MfiRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new MfiProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: MfiBarRow) => r.ticker)(fold)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One 5-minute (close, volume) bar on the stream — the
   * [[graft.operators.TimeSeries.closeVolBars5m]] columns. */
@@ -15,14 +14,14 @@ case class ObvBarRow(ticker: String, bucket: Timestamp, close: Double,
 case class ObvRow(ticker: String, bucket: Timestamp, close: Double,
     volume: Long, obv: Long)
 
-/** Streaming on-balance volume on `transformWithState`: per ticker
-  * the previous close and the running OBV live in two `ValueState`s —
-  * O(1) state per key — and each arriving bar emits the same
-  * cumulative signed-volume flow as the batch running-window kernel.
-  * Fifth twin instance, and the first CUMULATIVE one: where the
-  * lag-chain twins fold a bounded suffix, a running total is pure
-  * per-key state — the shape `transformWithState` models most
-  * directly.
+/** The OBV carry: the previous close and the running OBV. */
+case class ObvCarry(prevClose: Double, obv: Long)
+
+/** Streaming on-balance volume: per ticker an [[ObvCarry]] — O(1)
+  * state per key — and each arriving bar emits the same cumulative
+  * signed-volume flow as the batch running-window kernel. Fifth twin
+  * instance, and the first CUMULATIVE one: where the lag-chain twins
+  * fold a bounded suffix, a running total is pure per-key state.
   *
   * Exact-parity argument (spec-asserted): OBV is ALL-INTEGER (long
   * volume added/subtracted/skipped on the sign of an exact double
@@ -30,46 +29,27 @@ case class ObvRow(ticker: String, bucket: Timestamp, close: Double,
   * identically with no float-order considerations at all; the first
   * bar's NULL diff contributes flow 0 in both (batch: `when` chain
   * falls through; stream: no previous close). */
-class ObvProcessor extends StatefulProcessor[String, ObvBarRow, ObvRow] {
+object ObvState {
 
-  @transient private var prevClose: ValueState[Double] = _
-  @transient private var obv: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    prevClose = getHandle.getValueState[Double]("obv_prev_close",
-      Encoders.scalaDouble, TTLConfig.NONE)
-    obv = getHandle.getValueState[Long]("obv_total",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[ObvBarRow],
-      timerValues: TimerValues): Iterator[ObvRow] = {
-    var pc: Option[Double] =
-      if (prevClose.exists()) Some(prevClose.get()) else None
-    var total: Long = if (obv.exists()) obv.get() else 0L
+  private[streaming] def fold(key: String, start: Option[ObvCarry],
+      rows: Iterator[ObvBarRow]): (Option[ObvCarry], Iterator[ObvRow]) = {
+    var c = start
     val out = rows.toSeq.sortBy(_.bucket.getTime).map { r =>
-      val flow = pc match {
-        case Some(p) if r.close > p => r.volume
-        case Some(p) if r.close < p => -r.volume
+      val flow = c match {
+        case Some(p) if r.close > p.prevClose => r.volume
+        case Some(p) if r.close < p.prevClose => -r.volume
         case _ => 0L
       }
-      total += flow
-      pc = Some(r.close)
+      val total = c.fold(0L)(_.obv) + flow
+      c = Some(ObvCarry(r.close, total))
       ObvRow(key, r.bucket, r.close, r.volume, total)
     }
-    pc.foreach(prevClose.update)
-    obv.update(total)
-    out.iterator
+    (c, out.iterator)
   }
-}
-
-object ObvState {
 
   /** Attach streaming OBV (stream or batch input). */
   def attach(bars: Dataset[ObvBarRow]): Dataset[ObvRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new ObvProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: ObvBarRow) => r.ticker)(fold)
   }
 }

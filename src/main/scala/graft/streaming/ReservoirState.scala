@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Input projection for the streaming reservoir: the document key
   * columns plus its salted-hash priority (computed with the SAME
@@ -19,48 +18,40 @@ case class ResDoc(doc_id: Long, lang: String, source: String,
 case class ResRow(shard: Long, n_seen: Long, doc_id: Long, lang: String,
     source: String, priority: Long)
 
-/** Streaming priority (bottom-k) sample on `transformWithState`: the
-  * batch [[graft.operators.Curation.reservoirSample]] is a bottom-k by
+/** Streaming priority (bottom-k) sample as a keyed fold: the batch
+  * [[graft.operators.Curation.reservoirSample]] is a bottom-k by
   * (priority, doc_id), which is ASSOCIATIVE — so the streaming twin is
   * EXACT, not approximate, unlike a classical reservoir (whose content
-  * depends on encounter order). Documents hash-shard; each shard keeps
-  * its own bottom-k (CONSTANT state: shards × k rows at any stream
-  * volume), and the global sample is the bottom-k of the union of
-  * shard summaries — every global winner is by definition also a
-  * winner of its own shard, so the merge loses nothing. */
-class ReservoirProcessor(k: Int)
-    extends StatefulProcessor[Long, ResDoc, ResRow] {
-
-  @transient private var st: ValueState[(Long, List[ResDoc])] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, List[ResDoc])]("res_bottomk",
-      Encoders.kryo[(Long, List[ResDoc])], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[ResDoc],
-      timerValues: TimerValues): Iterator[ResRow] = {
-    var (n, kept) = if (st.exists()) st.get() else (0L, List.empty[ResDoc])
-    rows.foreach { d => n += 1; kept = d :: kept }
-    kept = kept.sortBy(d => (d.priority, d.doc_id)).take(k)
-    st.update((n, kept))
-    kept.map(d =>
-      ResRow(key, n, d.doc_id, d.lang, d.source, d.priority)).iterator
-  }
-}
-
+  * depends on encounter order). Documents hash-shard; each shard's
+  * carry is its running document count and its own bottom-k (CONSTANT
+  * state: shards × k rows at any stream volume), and the global sample
+  * is the bottom-k of the union of shard summaries — every global
+  * winner is by definition also a winner of its own shard, so the
+  * merge loses nothing. */
 object ReservoirState {
 
   /** Shard fan-out — any deterministic doc→shard map works (a doc's
     * candidacy never depends on which shard judged it). */
   val shards = 8
 
+  private[streaming] def fold(k: Int)(shard: Long,
+      start: Option[(Long, List[ResDoc])],
+      rows: Iterator[ResDoc]): (Option[(Long, List[ResDoc])], Iterator[ResRow]) = {
+    var (n, kept) = start.getOrElse((0L, List.empty[ResDoc]))
+    rows.foreach { d => n += 1; kept = d :: kept }
+    kept = kept.sortBy(d => (d.priority, d.doc_id)).take(k)
+    (Some((n, kept)), kept.map(d =>
+      ResRow(shard, n, d.doc_id, d.lang, d.source, d.priority)).iterator)
+  }
+
   /** Attach the streaming bottom-k (stream or batch input). */
   def attach(docs: Dataset[ResDoc],
       k: Int = graft.operators.Curation.ReservoirK): Dataset[ResRow] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(d => math.floorMod(d.doc_id, shards.toLong))
-      .transformWithState(new ReservoirProcessor(k), TimeMode.None(),
-        OutputMode.Append())
+    implicit val carry: Encoder[(Long, List[ResDoc])] =
+      Encoders.kryo[(Long, List[ResDoc])]
+    KeyedFold(docs, (d: ResDoc) => math.floorMod(d.doc_id, shards.toLong))(
+      fold(k))
   }
 
   /** Merge an append-sink table of [[ResRow]]s into the global sample:

@@ -2,22 +2,23 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar RSI emission — schema matches the batch
   * [[graft.operators.TimeSeries.rsiBars]] output. */
 case class RsiRow(ticker: String, bucket: Timestamp, close: Double,
     rsi_14: Option[Double])
 
-/** Streaming RSI(14) on `transformWithState`: per ticker, the previous
-  * close and the last [[graft.operators.TimeSeries.RsiSpan]] close
-  * diffs live in a `ValueState` + `ListState` — CONSTANT state per key
-  * regardless of stream length — and each arriving bar emits the same
-  * average-gain / average-loss ratio as the batch lag-chain kernel.
-  * Third instance (after [[MacdState]], [[AtrState]]) of the
+/** The RSI carry: the last [[graft.operators.TimeSeries.RsiSpan]]
+  * close diffs (NEWEST FIRST) and the previous close. */
+case class RsiCarry(diffs: List[Double], prevClose: Double)
+
+/** Streaming RSI(14): per ticker an [[RsiCarry]] — CONSTANT state per
+  * key regardless of stream length — and each arriving bar emits the
+  * same average-gain / average-loss ratio as the batch lag-chain
+  * kernel. Third instance (after [[MacdState]], [[AtrState]]) of the
   * mechanical twin recipe: a bounded batch lag-chain fold maps to a
-  * bounded ListState fold.
+  * bounded keyed fold.
   *
   * Bit-parity argument (spec-asserted): [[RsiState.gainLossFold]]
   * accumulates `greatest(d, 0)` / `greatest(-d, 0)` terms in the batch
@@ -28,40 +29,6 @@ case class RsiRow(ticker: String, bucket: Timestamp, close: Double,
   * out-of-range lag does, so omitting it from state is value-identical
   * term by term. Output tiering matches the batch `when` chain: no
   * diffs → NULL, zero loss → 100, else `round(100·ag/(ag+al), 6)`. */
-class RsiProcessor extends StatefulProcessor[String, BarRow, RsiRow] {
-
-  @transient private var diffs: ListState[Double] = _
-  @transient private var prevClose: ValueState[Double] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    diffs = getHandle.getListState[Double]("rsi_diffs",
-      Encoders.scalaDouble, TTLConfig.NONE)
-    prevClose = getHandle.getValueState[Double]("rsi_prev_close",
-      Encoders.scalaDouble, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[BarRow],
-      timerValues: TimerValues): Iterator[RsiRow] = {
-    import graft.operators.TimeSeries.RsiSpan
-    var ds: List[Double] = if (diffs.exists()) diffs.get().toList else Nil
-    var pc: Option[Double] =
-      if (prevClose.exists()) Some(prevClose.get()) else None
-    val out = rows.toSeq.sortBy(_.bucket.getTime).map { r =>
-      pc.foreach { p => ds = ((r.close - p) :: ds).take(RsiSpan) }
-      pc = Some(r.close)
-      val (gains, losses, cnt) = RsiState.gainLossFold(ds, RsiSpan)
-      val rsi =
-        if (cnt == 0L) None
-        else if (losses == 0.0) Some(100.0)
-        else Some(MacdState.round6(100.0 * gains / (gains + losses)))
-      RsiRow(key, r.bucket, r.close, rsi)
-    }
-    diffs.put(ds.toArray)
-    pc.foreach(prevClose.update)
-    out.iterator
-  }
-}
-
 object RsiState {
 
   /** (Σ gains, Σ losses, n) over `ds` (NEWEST FIRST), accumulated in
@@ -91,11 +58,27 @@ object RsiState {
     (gains, losses, cnt)
   }
 
+  private[streaming] def fold(key: String, start: Option[RsiCarry],
+      rows: Iterator[BarRow]): (Option[RsiCarry], Iterator[RsiRow]) = {
+    import graft.operators.TimeSeries.RsiSpan
+    var c = start
+    val out = rows.toSeq.sortBy(_.bucket.getTime).map { r =>
+      val ds = c.fold(List.empty[Double])(p =>
+        ((r.close - p.prevClose) :: p.diffs).take(RsiSpan))
+      c = Some(RsiCarry(ds, r.close))
+      val (gains, losses, cnt) = gainLossFold(ds, RsiSpan)
+      val rsi =
+        if (cnt == 0L) None
+        else if (losses == 0.0) Some(100.0)
+        else Some(round6(100.0 * gains / (gains + losses)))
+      RsiRow(key, r.bucket, r.close, rsi)
+    }
+    (c, out.iterator)
+  }
+
   /** Attach streaming RSI (stream or batch input). */
   def attach(bars: Dataset[BarRow]): Dataset[RsiRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new RsiProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: BarRow) => r.ticker)(fold)
   }
 }

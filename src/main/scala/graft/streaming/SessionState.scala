@@ -47,27 +47,13 @@ object SessionState {
   val gapMs: Long = 30L * 60L * 1000L
   private val gapUs: Long = gapMs * 1000L
 
-  // State folds in MICROSECONDS: the events table carries µs precision
-  // and `Timestamp.getTime` alone (ms) would shear the fraction off
-  // every session boundary the batch twin computes exactly.
-  private def usOf(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  private def tsOf(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
   private[streaming] def toRow(userId: Long, s: OpenSession): SessionRow =
     SessionRow(userId, tsOf(s.start), tsOf(s.last + gapUs),
       s.nEvents, s.nPurchases, s.nPurchases > 0)
 
-  /** The pure session fold, shared by BOTH state APIs (this object's
-    * `flatMapGroupsWithState` transition and
-    * [[SessionStateTws]]'s `transformWithState` processor): sorted
-    * events extend or close the open session; returns the surviving
-    * open session plus the sessions closed by this batch. */
+  /** The pure session fold: sorted events extend or close the open
+    * session; returns the surviving open session plus the sessions
+    * closed by this batch. */
   private[streaming] def fold(start: Option[OpenSession],
       rows: Iterator[SessionEvent]): (Option[OpenSession], Seq[OpenSession]) = {
     var open = start
@@ -93,8 +79,8 @@ object SessionState {
 
   /** The session's flush point in ms (rounded up so the µs tail can't
     * fire a hair early), clamped above the current watermark because
-    * the store rejects timers/timeouts at or behind it (a group whose
-    * gap already expired mid-trigger flushes on the next one). */
+    * the store rejects timeouts at or behind it (a group whose gap
+    * already expired mid-trigger flushes on the next one). */
   private[streaming] def flushAtMs(s: OpenSession, watermarkMs: Long): Long =
     math.max(Math.floorDiv(s.last + gapUs + 999L, 1000L), watermarkMs + 1)
 
@@ -109,7 +95,7 @@ object SessionState {
       val (open, closed) = fold(state.getOption, rows)
       open.foreach { s =>
         state.update(s)
-        state.setTimeoutTimestamp(flushAtMs(s, state.getCurrentWatermarkMs))
+        state.setTimeoutTimestamp(flushAtMs(s, state.getCurrentWatermarkMs()))
       }
       closed.map(toRow(userId, _)).iterator
     }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar stochastic-oscillator emission — schema matches the batch
   * [[graft.operators.TimeSeries.stochasticOhlc]] output (both
@@ -14,18 +13,21 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
 case class StochRow(ticker: String, window_timestamp: Timestamp,
     pct_k: Option[Double], pct_d: Option[Double])
 
-/** Streaming stochastic oscillator on `transformWithState`: per
-  * ticker, the last [[graft.operators.TimeSeries.StochSpan]] (high,
-  * low, close) bars and the last
-  * [[graft.operators.TimeSeries.StochSmooth]] raw %K values live in
-  * bounded `ListState`s — CONSTANT state per key — and each arriving
-  * bar emits the same trailing-extrema %K and lag-chain-smoothed %D
-  * as the batch kernel. Third proof (after [[MacdState]] and
-  * [[AtrState]]) that the generated-lag-chain indicator family is
-  * mechanically twinnable; this one adds the NULLABLE-kernel case
-  * (a flat extrema window yields NULL %K, which contributes zero
-  * weight to %D — encoded as NaN in state, exactly the batch
-  * when-guard semantics).
+/** The stochastic carry, all lists NEWEST FIRST: the last
+  * [[graft.operators.TimeSeries.StochSpan]] highs and lows and the last
+  * [[graft.operators.TimeSeries.StochSmooth]] raw %K values (NaN =
+  * NULL %K). */
+case class StochCarry(highs: List[Double], lows: List[Double],
+    kraws: List[Double])
+
+/** Streaming stochastic oscillator: per ticker a [[StochCarry]] —
+  * CONSTANT state per key — and each arriving bar emits the same
+  * trailing-extrema %K and lag-chain-smoothed %D as the batch kernel.
+  * Third proof (after [[MacdState]] and [[AtrState]]) that the
+  * generated-lag-chain indicator family is mechanically twinnable;
+  * this one adds the NULLABLE-kernel case (a flat extrema window
+  * yields NULL %K, which contributes zero weight to %D — encoded as
+  * NaN in state, exactly the batch when-guard semantics).
   *
   * Bit-parity argument (spec-asserted): the window extrema are exact
   * comparisons (order-independent); %K is stated in the batch
@@ -33,47 +35,6 @@ case class StochRow(ticker: String, window_timestamp: Timestamp,
   * [[StochState.smoothFold]] accumulates the %D numerator/count in
   * the batch `reduce(_ + _)` textual order with the same literal 0.0
   * / 0L for missing or NULL lags. */
-class StochProcessor extends StatefulProcessor[String, OhlcRow, StochRow] {
-
-  @transient private var highs: ListState[Double] = _
-  @transient private var lows: ListState[Double] = _
-  @transient private var kraws: ListState[Double] = _ // NaN = NULL %K
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    highs = getHandle.getListState[Double]("stoch_highs",
-      Encoders.scalaDouble, TTLConfig.NONE)
-    lows = getHandle.getListState[Double]("stoch_lows",
-      Encoders.scalaDouble, TTLConfig.NONE)
-    kraws = getHandle.getListState[Double]("stoch_kraws",
-      Encoders.scalaDouble, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[StochRow] = {
-    import graft.operators.TimeSeries.{StochSmooth, StochSpan}
-    var hs: List[Double] = if (highs.exists()) highs.get().toList else Nil
-    var ls: List[Double] = if (lows.exists()) lows.get().toList else Nil
-    var ks: List[Double] = if (kraws.exists()) kraws.get().toList else Nil
-    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
-      hs = (r.high :: hs).take(StochSpan)
-      ls = (r.low :: ls).take(StochSpan)
-      val hh = hs.max
-      val ll = ls.min
-      val kRaw =
-        if (hh != ll) 100.0 * (r.close - ll) / (hh - ll) else Double.NaN
-      ks = (kRaw :: ks).take(StochSmooth)
-      val (num, den) = StochState.smoothFold(ks, StochSmooth)
-      StochRow(key, r.window_timestamp,
-        if (kRaw.isNaN) None else Some(MacdState.round6(kRaw)),
-        if (den > 0) Some(MacdState.round6(num / den)) else None)
-    }
-    highs.put(hs.toArray)
-    lows.put(ls.toArray)
-    kraws.put(ks.toArray)
-    out.iterator
-  }
-}
-
 object StochState {
 
   /** %D numerator/count over the raw %K list (NEWEST FIRST, NaN =
@@ -99,11 +60,30 @@ object StochState {
     (num, den)
   }
 
+  private[streaming] def fold(key: String, start: Option[StochCarry],
+      rows: Iterator[OhlcRow]): (Option[StochCarry], Iterator[StochRow]) = {
+    import graft.operators.TimeSeries.{StochSmooth, StochSpan}
+    var c = start.getOrElse(StochCarry(Nil, Nil, Nil))
+    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
+      val hs = (r.high :: c.highs).take(StochSpan)
+      val ls = (r.low :: c.lows).take(StochSpan)
+      val hh = hs.max
+      val ll = ls.min
+      val kRaw =
+        if (hh != ll) 100.0 * (r.close - ll) / (hh - ll) else Double.NaN
+      val ks = (kRaw :: c.kraws).take(StochSmooth)
+      c = StochCarry(hs, ls, ks)
+      val (num, den) = smoothFold(ks, StochSmooth)
+      StochRow(key, r.window_timestamp,
+        if (kRaw.isNaN) None else Some(round6(kRaw)),
+        if (den > 0) Some(round6(num / den)) else None)
+    }
+    (Some(c), out.iterator)
+  }
+
   /** Attach streaming stochastic (stream or batch input). */
   def attach(bars: Dataset[OhlcRow]): Dataset[StochRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new StochProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

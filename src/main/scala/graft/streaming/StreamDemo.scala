@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable end-to-end streaming demo: file-stream the events table
   * through the full analysis DAG (normalize → watermark → windowed aggs
   * → join → spike → parquet append sink), then print sink stats.
@@ -11,14 +9,7 @@ object StreamDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption
       .getOrElse(java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.GraftSession(graft.GraftSession.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     val q = StreamingPipeline.analysisSink(spark, sfDir, s"$out/analysis",
       s"$out/checkpoint")

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One normalized tick on the stream (the
   * [[graft.operators.StockPipeline.normalize]] columns the tick-rule
@@ -17,14 +16,12 @@ case class TickSideRow(ticker: String, ts: Timestamp, event_id: Long,
     volume: Long, side: Option[Int])
 
 /** The tick-rule carry: the previous price and the last resolved
-  * side (`hasSide = false` while the leading run is unclassified). */
-case class TickCarry(prevPrice: Double, hasPrev: Boolean,
-    side: Int, hasSide: Boolean)
+  * side (`None` while the leading run is unclassified). */
+case class TickCarry(prevPrice: Double, side: Option[Int])
 
-/** Streaming tick-rule trade classification on `transformWithState`:
-  * per ticker ONE `ValueState` carries the previous price and the
-  * last resolved side — O(1) state per key, the leanest twin state
-  * yet — and each arriving event is classified exactly as the batch
+/** Streaming tick-rule trade classification: per ticker ONE
+  * [[TickCarry]] — O(1) state per key, the leanest twin state yet —
+  * and each arriving event is classified exactly as the batch
   * `last(tick, ignoreNulls)` carry does: uptick → +1, downtick → −1,
   * zero tick inherits, the leading run stays None. This is the
   * canonical ingest-side enrichment: the classification column lands
@@ -36,45 +33,27 @@ case class TickCarry(prevPrice: Double, hasPrev: Boolean,
   * accumulation anywhere — so stream and batch agree identically;
   * within a trigger, rows sort by the same (ts, event_id) total
   * order the batch window states. */
-class TickProcessor
-    extends StatefulProcessor[String, TickEventRow, TickSideRow] {
+object TickState {
 
-  @transient private var carry: ValueState[TickCarry] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    carry = getHandle.getValueState[TickCarry]("tick_carry",
-      Encoders.product[TickCarry], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[TickEventRow],
-      timerValues: TimerValues): Iterator[TickSideRow] = {
-    var c: TickCarry =
-      if (carry.exists()) carry.get()
-      else TickCarry(0.0, hasPrev = false, 0, hasSide = false)
+  private[streaming] def fold(key: String, start: Option[TickCarry],
+      rows: Iterator[TickEventRow]): (Option[TickCarry], Iterator[TickSideRow]) = {
+    var c = start
     val out = rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id)).map { r =>
-      val tick: Option[Int] =
-        if (!c.hasPrev) None
-        else if (r.price > c.prevPrice) Some(1)
-        else if (r.price < c.prevPrice) Some(-1)
+      val tick: Option[Int] = c.flatMap { p =>
+        if (r.price > p.prevPrice) Some(1)
+        else if (r.price < p.prevPrice) Some(-1)
         else None
-      val side: Option[Int] = tick.orElse(
-        if (c.hasSide) Some(c.side) else None)
-      c = TickCarry(r.price, hasPrev = true,
-        side.getOrElse(0), side.isDefined)
+      }
+      val side = tick.orElse(c.flatMap(_.side))
+      c = Some(TickCarry(r.price, side))
       TickSideRow(key, r.ts, r.event_id, r.volume, side)
     }
-    carry.update(c)
-    out.iterator
+    (c, out.iterator)
   }
-}
-
-object TickState {
 
   /** Attach streaming tick classification (stream or batch input). */
   def attach(events: Dataset[TickEventRow]): Dataset[TickSideRow] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.ticker)
-      .transformWithState(new TickProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(events, (e: TickEventRow) => e.ticker)(fold)
   }
 }

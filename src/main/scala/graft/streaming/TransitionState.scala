@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One event entering streaming transition counting. */
 case class TransEvent(user_id: Long, ts: Timestamp, event_id: Long,
@@ -29,12 +28,8 @@ case class TransStep(user_id: Long, from_type: String, to_type: String)
   * result exactly. */
 object TransitionState {
 
-  private def usOf(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  /** Pure carry fold, shared with tests. */
-  private[streaming] def fold(start: Option[TransCarry],
-      rows: Iterator[TransEvent]): (Option[TransCarry], Seq[TransStep]) = {
+  private[streaming] def fold(userId: Long, start: Option[TransCarry],
+      rows: Iterator[TransEvent]): (Option[TransCarry], Iterator[TransStep]) = {
     var carry = start
     val out = Seq.newBuilder[TransStep]
     rows.toSeq.sortBy(e => (usOf(e.ts), e.event_id)).foreach { e =>
@@ -43,23 +38,14 @@ object TransitionState {
       }
       carry = Some(TransCarry(usOf(e.ts), e.event_id, e.event_type))
     }
-    (carry, out.result())
-  }
-
-  def transition(userId: Long, rows: Iterator[TransEvent],
-      state: GroupState[TransCarry]): Iterator[TransStep] = {
-    val (carry, out) = fold(state.getOption, rows)
-    carry.foreach(state.update)
-    out.iterator
+    (carry, out.result().iterator)
   }
 
   /** Attach transition-step extraction to a watermarked event stream. */
   def steps(events: Dataset[TransEvent],
       delay: String = "0 seconds"): Dataset[TransStep] = {
     import events.sparkSession.implicits._
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(transition _)
+    KeyedFold(events.withWatermark("ts", delay),
+      (e: TransEvent) => e.user_id)(fold)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar Vortex emission — schema matches the batch
   * [[graft.operators.TimeSeries.vortexOhlc]] output. */
@@ -15,9 +14,11 @@ case class VortexRow(ticker: String, window_timestamp: Timestamp,
   * false` = the first-bar NULL tier, still occupying a lag slot). */
 case class VortexTerm(has: Boolean, vmp: Double, vmm: Double, tr: Double)
 
-/** Streaming Vortex indicator on `transformWithState`: per ticker the
-  * previous bar and the last [[graft.operators.TimeSeries.VortexSpan]]
-  * (VM±, TR) terms live in a `ValueState` + `ListState` — the
+/** The Vortex carry: the last [[graft.operators.TimeSeries.VortexSpan]]
+  * (VM±, TR) terms (NEWEST FIRST) and the previous bar. */
+case class VortexCarry(terms: List[VortexTerm], prev: AdxPrevBar)
+
+/** Streaming Vortex indicator: per ticker a [[VortexCarry]] — the
   * [[AdxState]] level-1 recipe with cross-bar extremum distances
   * instead of directional moves, and no second chain tier.
   *
@@ -25,50 +26,6 @@ case class VortexTerm(has: Boolean, vmp: Double, vmm: Double, tr: Double)
   * VM⁻ = |L − prev H| are single exact double ops; chains accumulate
   * in the batch textual order with literal 0.0 for missing/NULL-tier
   * lags; zero ΣTR → None for all three ratios via the same guard. */
-class VortexProcessor
-    extends StatefulProcessor[String, OhlcRow, VortexRow] {
-
-  @transient private var terms: ListState[VortexTerm] = _
-  @transient private var prev: ValueState[AdxPrevBar] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    terms = getHandle.getListState[VortexTerm]("vortex_terms",
-      Encoders.product[VortexTerm], TTLConfig.NONE)
-    prev = getHandle.getValueState[AdxPrevBar]("vortex_prev",
-      Encoders.product[AdxPrevBar], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[VortexRow] = {
-    import graft.operators.TimeSeries.VortexSpan
-    var ts: List[VortexTerm] =
-      if (terms.exists()) terms.get().toList else Nil
-    var pb: Option[AdxPrevBar] =
-      if (prev.exists()) Some(prev.get()) else None
-    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
-      val term = pb match {
-        case None => VortexTerm(has = false, 0.0, 0.0, 0.0)
-        case Some(p) => VortexTerm(has = true,
-          math.abs(r.high - p.low),
-          math.abs(r.low - p.high),
-          math.max(math.max(r.high - r.low, math.abs(r.high - p.close)),
-            math.abs(r.low - p.close)))
-      }
-      ts = (term :: ts).take(VortexSpan)
-      pb = Some(AdxPrevBar(r.high, r.low, r.close))
-      val (sp, sm, st) = VortexState.chainFold(ts, VortexSpan)
-      if (st == 0.0) VortexRow(key, r.window_timestamp, None, None, None)
-      else VortexRow(key, r.window_timestamp,
-        Some(MacdState.round6(sp / st)),
-        Some(MacdState.round6(sm / st)),
-        Some(MacdState.round6(sp / st - sm / st)))
-    }
-    terms.put(ts.toArray)
-    pb.foreach(prev.update)
-    out.iterator
-  }
-}
-
 object VortexState {
 
   /** (ΣVM⁺, ΣVM⁻, ΣTR) over `xs` (NEWEST FIRST) in the batch chain's
@@ -89,11 +46,33 @@ object VortexState {
     (sp, sm, st)
   }
 
+  private[streaming] def fold(key: String, start: Option[VortexCarry],
+      rows: Iterator[OhlcRow]): (Option[VortexCarry], Iterator[VortexRow]) = {
+    import graft.operators.TimeSeries.VortexSpan
+    var c = start
+    val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
+      val term = c match {
+        case None => VortexTerm(has = false, 0.0, 0.0, 0.0)
+        case Some(VortexCarry(_, p)) => VortexTerm(has = true,
+          math.abs(r.high - p.low),
+          math.abs(r.low - p.high),
+          math.max(math.max(r.high - r.low, math.abs(r.high - p.close)),
+            math.abs(r.low - p.close)))
+      }
+      val ts = (term :: c.fold(List.empty[VortexTerm])(_.terms)).take(VortexSpan)
+      c = Some(VortexCarry(ts, AdxPrevBar(r.high, r.low, r.close)))
+      val (sp, sm, st) = chainFold(ts, VortexSpan)
+      if (st == 0.0) VortexRow(key, r.window_timestamp, None, None, None)
+      else VortexRow(key, r.window_timestamp,
+        Some(round6(sp / st)), Some(round6(sm / st)),
+        Some(round6(sp / st - sm / st)))
+    }
+    (c, out.iterator)
+  }
+
   /** Attach streaming Vortex (stream or batch input). */
   def attach(bars: Dataset[OhlcRow]): Dataset[VortexRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new VortexProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

@@ -2,58 +2,42 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.Dataset
 
 /** Per-bar Williams %R emission — schema matches the batch
   * [[graft.operators.TimeSeries.williamsROhlc]] output. */
 case class WilliamsRow(ticker: String, window_timestamp: Timestamp,
     close: Double, hh: Double, ll: Double, williams_r: Option[Double])
 
-/** Streaming Williams %R on `transformWithState`: per ticker the last
-  * [[graft.operators.TimeSeries.WillSpan]] (high, low) pairs live in
-  * one `ListState` (the [[DonchianState]] recipe — frame extremes are
-  * order-insensitive max/min, no textual fold needed) and each
-  * arriving bar emits the same −100·(HH−close)/(HH−LL) gauge as the
-  * batch frame-window kernel, including the flat-window NULL tier
-  * (HH = LL). The ratio uses the UNROUNDED extremes exactly as the
-  * batch expression does; only the emitted hh/ll columns round. */
-class WilliamsProcessor
-    extends StatefulProcessor[String, OhlcRow, WilliamsRow] {
+/** Streaming Williams %R: per ticker the carry is the last
+  * [[graft.operators.TimeSeries.WillSpan]] (high, low) pairs (the
+  * [[DonchianState]] recipe — frame extremes are order-insensitive
+  * max/min, no textual fold needed) and each arriving bar emits the
+  * same −100·(HH−close)/(HH−LL) gauge as the batch frame-window kernel,
+  * including the flat-window NULL tier (HH = LL). The ratio uses the
+  * UNROUNDED extremes exactly as the batch expression does; only the
+  * emitted hh/ll columns round. */
+object WilliamsState {
 
-  @transient private var hls: ListState[HlPair] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    hls = getHandle.getListState[HlPair]("williams_hl",
-      Encoders.product[HlPair], TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[OhlcRow],
-      timerValues: TimerValues): Iterator[WilliamsRow] = {
+  private[streaming] def fold(key: String, start: Option[List[HlPair]],
+      rows: Iterator[OhlcRow]): (Option[List[HlPair]], Iterator[WilliamsRow]) = {
     import graft.operators.TimeSeries.WillSpan
-    var hs: List[HlPair] = if (hls.exists()) hls.get().toList else Nil
+    var hs = start.getOrElse(Nil)
     val out = rows.toSeq.sortBy(_.window_timestamp.getTime).map { r =>
       hs = (HlPair(r.high, r.low) :: hs).take(WillSpan)
       val hh = hs.iterator.map(_.high).max
       val ll = hs.iterator.map(_.low).min
       val wr =
         if (hh == ll) None
-        else Some(MacdState.round6(-100.0 * (hh - r.close) / (hh - ll)))
-      WilliamsRow(key, r.window_timestamp, r.close,
-        MacdState.round6(hh), MacdState.round6(ll), wr)
+        else Some(round6(-100.0 * (hh - r.close) / (hh - ll)))
+      WilliamsRow(key, r.window_timestamp, r.close, round6(hh), round6(ll), wr)
     }
-    hls.put(hs.toArray)
-    out.iterator
+    (Some(hs), out.iterator)
   }
-}
-
-object WilliamsState {
 
   /** Attach streaming Williams %R (stream or batch input). */
   def attach(bars: Dataset[OhlcRow]): Dataset[WilliamsRow] = {
     import bars.sparkSession.implicits._
-    bars.groupByKey(_.ticker)
-      .transformWithState(new WilliamsProcessor, TimeMode.None(),
-        OutputMode.Append())
+    KeyedFold(bars, (r: OhlcRow) => r.ticker)(fold)
   }
 }

@@ -1026,32 +1026,24 @@ class CurationSpec extends SparkSpec {
           col("doc_id").cast("string"))).as("priority"))
       .as[ResDoc].collect()
     val chunks = resDocs.grouped(math.max(resDocs.length / 4, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ResDoc]
-    val q = ReservoirState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("res_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = ReservoirState
-        .mergedSample(spark.table("res_tws_sink")).collect()
-      val batch = Curation.reservoirSample(d).collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ResDoc]
+      val q = ReservoirState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("res_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = ReservoirState
+          .mergedSample(spark.table("res_tws_sink")).collect()
+        val batch = Curation.reservoirSample(d).collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 

@@ -18,16 +18,6 @@ import graft.operators.{Dedup, Similarity}
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withMode[A](mode: String)(body: => A): A = {
-    val prev = sys.props.get(Materialize.modeProp)
-    sys.props(Materialize.modeProp) = mode
-    try body
-    finally prev match {
-      case Some(v) => sys.props(Materialize.modeProp) = v
-      case None => sys.props.remove(Materialize.modeProp)
-    }
-  }
-
   // path 0-1-...-19 (ten peel layers) plus a disjoint triangle: the
   // 2-core is the triangle
   private val pathTriangle =
@@ -100,7 +90,7 @@ class FixpointSpec extends SparkSpec {
     val cs = Fixpoint.checksum(col("k"))
     val expect = df.agg(cs.aggs.head, cs.aggs.tail: _*).head().toSeq
     for (mode <- Seq("local", "reliable", "none")) withClue(s"mode=$mode: ") {
-      withMode(mode) {
+      withProp(Materialize.modeProp -> mode) {
         assert(Fixpoint.start(df).rowCount === n)
         assert(Fixpoint.start(df).sig === Seq(n))
         assert(Fixpoint.start(df, cs).sig === expect)
@@ -119,7 +109,7 @@ class FixpointSpec extends SparkSpec {
   test("job-count guard: the k-core peel's single-task finish stays at " +
       "a fixed small job count, and its distributed rounds run no count " +
       "job beyond each round's pin") {
-    withMode("local") {
+    withProp(Materialize.modeProp -> "local") {
       val (localJobs, localExecs) = counted("kcore-local") {
         assert(core(Dedup.ccLocalMaxEdges) === Set(100L, 101L, 102L))
       }

@@ -24,9 +24,7 @@ class MaterializeSpec extends SparkSpec {
   test("reliable mode is bit-identical to local mode on the CC chain " +
       "and actually writes reliable checkpoints") {
     val local = clustersRows()
-    val prev = sys.props.get(Materialize.modeProp)
-    sys.props(Materialize.modeProp) = "reliable"
-    try {
+    withProp(Materialize.modeProp -> "reliable") {
       val reliable = clustersRows()
       assert(reliable === local)
       // the mode really engaged: a checkpoint dir was provisioned and
@@ -40,11 +38,6 @@ class MaterializeSpec extends SparkSpec {
           Option(f.listFiles()).exists(_.exists(hasRddDir)))
       assert(hasRddDir(root),
         s"expected rdd-* checkpoint data under $root")
-    } finally {
-      prev match {
-        case Some(v) => sys.props(Materialize.modeProp) = v
-        case None => sys.props.remove(Materialize.modeProp)
-      }
     }
   }
 
@@ -86,9 +79,7 @@ class MaterializeSpec extends SparkSpec {
   test("reliable mode: withPins deletes the scope's checkpoint files") {
     import graft.Materialize.PinOps
     import spark.implicits._
-    val prev = sys.props.get(Materialize.modeProp)
-    sys.props(Materialize.modeProp) = "reliable"
-    try {
+    withProp(Materialize.modeProp -> "reliable") {
       def rddDirs(): Set[String] =
         spark.sparkContext.getCheckpointDir.toSet[String].flatMap { d =>
           Option(new java.io.File(new java.net.URI(d).getPath).listFiles())
@@ -102,11 +93,6 @@ class MaterializeSpec extends SparkSpec {
       }
       assert(rddDirs() === before,
         "scope exit must delete the scope's rdd-* checkpoint dirs")
-    } finally {
-      prev match {
-        case Some(v) => sys.props(Materialize.modeProp) = v
-        case None => sys.props.remove(Materialize.modeProp)
-      }
     }
   }
 }

@@ -123,17 +123,12 @@ class PlanShapeSpec extends SparkSpec {
     // the Generate inside the LogicalRDD, so re-plan with the identity
     // pin to keep the original Generate == 1 lock (a regression that
     // duplicates the explode would pass the scan counts above)
-    val prev = sys.props.get(Materialize.modeProp)
-    sys.props(Materialize.modeProp) = "none"
-    try {
+    withProp(Materialize.modeProp -> "none") {
       Seq("q4_health", "q2_trend_signals").foreach { q =>
         val p = plan(q)
         assert(countOf(p, "Generate") == 1, s"$q (mode=none):\n$p")
         assert(countOf(p, "Scan parquet") == 2, s"$q (mode=none):\n$p")
       }
-    } finally prev match {
-      case Some(v) => sys.props(Materialize.modeProp) = v
-      case None => sys.props.remove(Materialize.modeProp)
     }
   }
 

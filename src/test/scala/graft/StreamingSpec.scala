@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.StockPipeline
 import graft.sources.Tables
-import graft.streaming.{SpikeState, SpikeStateTws, StreamingPipeline, VolumeRow}
+import graft.streaming.{SpikeState, StreamingPipeline, VolumeRow}
 
 case class RawEvent(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
@@ -163,41 +163,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("spike: transformWithState (ListState) equals batch window frame") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val agg = StockPipeline.agg1m(
-        StockPipeline.normalize(Tables.events(spark, dir)))
-      .select("ticker", "window_timestamp", "total_volume_1m")
-    val rows = agg.as[VolumeRow].collect().sortBy(_.window_timestamp.getTime)
-    val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    // transformWithState requires the RocksDB state-store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = MemoryStream[VolumeRow]
-    val q = SpikeStateTws.detect(stream.toDS()).writeStream
-      .format("memory").queryName("spike_tws_sink").outputMode("append").start()
-    try {
-      chunks.foreach { c => stream.addData(c.toSeq: _*); q.processAllAvailable() }
-      val streamed = spark.table("spike_tws_sink")
-        .select("ticker", "window_timestamp", "hist_avg_volume", "is_volume_spike")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = StockPipeline.withSpike(agg)
-        .select("ticker", "window_timestamp", "hist_avg_volume", "is_volume_spike")
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length)
-      streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("replay index: contiguous 0..n-1 in (ts, event_id) order, built band-parallel") {
     // force 8 ts bands: the index must stay globally contiguous even
     // though no single window partition ever sees the whole table
@@ -221,27 +186,18 @@ class StreamingSpec extends SparkSpec {
       "degrades to a shuffled equi join with identical rows") {
     val dir = "/root/testdata/sf0.001"
     val viaBroadcast = StreamingPipeline.replayBatch(spark, dir)
-    val prop = StreamingPipeline.replayBroadcastMaxRowsProp
-    val prev = sys.props.get(prop)
-    sys.props(prop) = "1" // every real recording exceeds one row
-    // also silence the optimizer's own small-table broadcast (correct at
-    // test scale, absent at the 100× scale this guard exists for) so the
-    // plan shows what the guard DECLARES: no forced bars broadcast
-    val abt = "spark.sql.autoBroadcastJoinThreshold"
-    val prevAbt = spark.conf.get(abt)
-    spark.conf.set(abt, "-1")
-    try {
-      val viaShuffle = StreamingPipeline.replayBatch(spark, dir)
-      val plan = viaShuffle.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin [idx"),
-        s"above the threshold the idx join must not declare a broadcast:\n$plan")
-      // the degraded plan is the same query: row-identical output
-      assert(viaShuffle.collect().toSeq === viaBroadcast.collect().toSeq)
-    } finally {
-      spark.conf.set(abt, prevAbt)
-      prev match {
-        case Some(v) => sys.props(prop) = v
-        case None => sys.props.remove(prop)
+    // every real recording exceeds one row; also silence the
+    // optimizer's own small-table broadcast (correct at test scale,
+    // absent at the 100× scale this guard exists for) so the plan shows
+    // what the guard DECLARES: no forced bars broadcast
+    withProp(StreamingPipeline.replayBroadcastMaxRowsProp -> "1") {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val viaShuffle = StreamingPipeline.replayBatch(spark, dir)
+        val plan = viaShuffle.queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastHashJoin [idx"),
+          s"above the threshold the idx join must not declare a broadcast:\n$plan")
+        // the degraded plan is the same query: row-identical output
+        assert(viaShuffle.collect().toSeq === viaBroadcast.collect().toSeq)
       }
     }
   }
@@ -629,55 +585,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming sessionization (transformWithState, event-time " +
-      "timers) equals the batch session_window query on real data") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val events = Tables.events(spark, dir)
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[graft.streaming.SessionEvent]
-      .collect().sortBy(_.ts.getTime)
-    val maxTs = events.map(_.ts.getTime).max
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = MemoryStream[graft.streaming.SessionEvent]
-    val q = graft.streaming.SessionStateTws.sessionize(stream.toDS())
-      .writeStream.format("memory").queryName("session_tws_sink")
-      .outputMode("append").start()
-    try {
-      val (a, b) = events.splitAt(events.length / 2)
-      stream.addData(a.toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(b.toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(graft.streaming.SessionEvent(-1L,
-        new java.sql.Timestamp(maxTs + 10L * graft.streaming.SessionState.gapMs),
-        "view"))
-      q.processAllAvailable()
-      stream.addData(graft.streaming.SessionEvent(-1L,
-        new java.sql.Timestamp(maxTs + 20L * graft.streaming.SessionState.gapMs),
-        "view"))
-      q.processAllAvailable()
-      val streamed = spark.table("session_tws_sink")
-        .filter(col("user_id") >= 0)
-        .orderBy("user_id", "session_start").collect()
-      val batch = graft.operators.Relational.userSessions(spark, dir)
-        .orderBy("user_id", "session_start").collect()
-      assert(streamed.length === batch.length && batch.length > 0)
-      streamed.zip(batch).foreach { case (s, bt) =>
-        assert(s.toSeq === bt.toSeq, s"stream $s vs batch $bt")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("streaming sessionization (flatMapGroupsWithState) equals the " +
       "batch session_window query on real data") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -724,38 +631,30 @@ class StreamingSpec extends SparkSpec {
       "capacity covers the keys; guarantees hold when it does not") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{HeavyHitters, HhEvent}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // skewed stream: user u appears (u+1)·5 times for u in 0..9 —
-    // 10 distinct users over 4 shards; capacity 8 ≥ any shard's keys
-    val events = (0L until 10L).flatMap(u =>
-      Seq.fill(((u + 1) * 5).toInt)(HhEvent(u)))
-    val truth = events.groupBy(_.user_id).view.mapValues(_.size.toLong).toMap
-    val stream = MemoryStream[HhEvent]
-    val q = HeavyHitters.track(stream.toDS()).writeStream
-      .format("memory").queryName("hh_sink").outputMode("append").start()
-    try {
-      // two triggers: state must carry counts across them
-      val (a, b) = events.splitAt(events.size / 2)
-      stream.addData(a: _*); q.processAllAvailable()
-      stream.addData(b: _*); q.processAllAvailable()
-      // newest estimate per user = max est_count across emissions
-      val est = spark.table("hh_sink").collect()
-        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
-      truth.foreach { case (u, n) =>
-        val (_, e, err) = est(u)
-        assert(e === n, s"capacity covers all keys → exact count for $u")
-        assert(err === 0L)
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      // skewed stream: user u appears (u+1)·5 times for u in 0..9 —
+      // 10 distinct users over 4 shards; capacity 8 ≥ any shard's keys
+      val events = (0L until 10L).flatMap(u =>
+        Seq.fill(((u + 1) * 5).toInt)(HhEvent(u)))
+      val truth = events.groupBy(_.user_id).view.mapValues(_.size.toLong).toMap
+      val stream = MemoryStream[HhEvent]
+      val q = HeavyHitters.track(stream.toDS()).writeStream
+        .format("memory").queryName("hh_sink").outputMode("append").start()
+      try {
+        // two triggers: state must carry counts across them
+        val (a, b) = events.splitAt(events.size / 2)
+        stream.addData(a: _*); q.processAllAvailable()
+        stream.addData(b: _*); q.processAllAvailable()
+        // newest estimate per user = max est_count across emissions
+        val est = spark.table("hh_sink").collect()
+          .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+          .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
+        truth.foreach { case (u, n) =>
+          val (_, e, err) = est(u)
+          assert(e === n, s"capacity covers all keys → exact count for $u")
+          assert(err === 0L)
+        }
+      } finally q.stop()
     }
     // over-capacity batch-mode check: same operator body, no store —
     // 20 distinct keys on 4 shards with capacity 2 forces evictions;

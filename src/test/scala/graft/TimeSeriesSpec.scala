@@ -108,47 +108,6 @@ class TimeSeriesSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming gap-fill (transformWithState) equals the batch query " +
-      "and the flatMapGroupsWithState twin on real data") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val barsDf = TimeSeries.closeBars5m(
-      graft.operators.StockPipeline.normalize(
-        graft.sources.Tables.events(spark, dir)))
-    val barRows = barsDf.as[graft.streaming.BarEvent]
-      .collect().sortBy(_.bucket.getTime)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = MemoryStream[graft.streaming.BarEvent]
-    val q = graft.streaming.GapfillStateTws.gapfill(stream.toDS())
-      .writeStream.format("memory").queryName("gapfill_tws_sink")
-      .outputMode("append").start()
-    try {
-      val (a, b) = barRows.splitAt(barRows.length / 2)
-      stream.addData(a.toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(b.toIndexedSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("gapfill_tws_sink")
-        .orderBy("ticker", "bucket").collect()
-      val batch = TimeSeries.gapfillBars(barsDf)
-        .orderBy("ticker", "bucket").collect()
-      assert(streamed.length === batch.length && batch.length > 0)
-      streamed.zip(batch).foreach { case (s, bt) =>
-        assert(s.toSeq === bt.toSeq, s"stream $s vs batch $bt")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("rsiBars: leading row is NULL, pure uptrend pins 100, pure " +
       "downtrend pins 0, balanced alternation gives 50") {
     val up = (0 until 6).map(i => ("UP", i * 5, 10.0 + i))
@@ -562,33 +521,25 @@ class TimeSeriesSpec extends SparkSpec {
     import spark.implicits._
     val rows = barsDf.as[ObvBarRow].collect().sortBy(_.bucket.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ObvBarRow]
-    val q = ObvState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("obv_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("obv_tws_sink")
-        .orderBy("ticker", "bucket").collect()
-      val batch = graft.operators.TimeSeries.obvBars(barsDf)
-        .orderBy("ticker", "bucket").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ObvBarRow]
+      val q = ObvState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("obv_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("obv_tws_sink")
+          .orderBy("ticker", "bucket").collect()
+        val batch = graft.operators.TimeSeries.obvBars(barsDf)
+          .orderBy("ticker", "bucket").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -817,33 +768,25 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = DonchianState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("donchian_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("donchian_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.donchianOhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = DonchianState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("donchian_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("donchian_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.donchianOhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -860,36 +803,28 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = AdxState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("adx_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("adx_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.adxOhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      // the NULL tiers must be exercised: every ticker's first bar is
-      // NULL-DI on both sides
-      assert(batch.exists(_.isNullAt(2)))
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = AdxState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("adx_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("adx_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.adxOhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        // the NULL tiers must be exercised: every ticker's first bar is
+        // NULL-DI on both sides
+        assert(batch.exists(_.isNullAt(2)))
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -906,33 +841,25 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = WilliamsState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("williams_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("williams_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.williamsROhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = WilliamsState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("williams_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("williams_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.williamsROhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -950,37 +877,29 @@ class TimeSeriesSpec extends SparkSpec {
         "volume")
       .as[MfiBarRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[MfiBarRow]
-    val q = MfiState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("mfi_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("mfi_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.mfiOhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      // the neither-side tier must be exercised on real bars: some
-      // mid-stream MFI is NULL only if total flow is zero — instead
-      // assert the warm-up tier: every ticker's first bar is NULL
-      assert(batch.exists(_.isNullAt(3)))
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[MfiBarRow]
+      val q = MfiState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("mfi_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("mfi_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.mfiOhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        // the neither-side tier must be exercised on real bars: some
+        // mid-stream MFI is NULL only if total flow is zero — instead
+        // assert the warm-up tier: every ticker's first bar is NULL
+        assert(batch.exists(_.isNullAt(3)))
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1017,37 +936,29 @@ class TimeSeriesSpec extends SparkSpec {
       .as[TickEventRow].collect()
       .sortBy(r => (r.ts.getTime, r.event_id))
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[TickEventRow]
-    val q = TickState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("tick_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("tick_tws_sink")
-        .orderBy("ticker", "ts", "event_id").collect()
-      val batch = graft.operators.TimeSeries.tickSides(evDf)
-        .select("ticker", "ts", "event_id", "volume", "side")
-        .orderBy("ticker", "ts", "event_id").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      // both classification tiers must be live on this corpus
-      assert(batch.exists(_.isNullAt(4)), "no unclassified leading run")
-      assert(batch.exists(r => !r.isNullAt(4)), "no classified events")
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[TickEventRow]
+      val q = TickState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("tick_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("tick_tws_sink")
+          .orderBy("ticker", "ts", "event_id").collect()
+        val batch = graft.operators.TimeSeries.tickSides(evDf)
+          .select("ticker", "ts", "event_id", "volume", "side")
+          .orderBy("ticker", "ts", "event_id").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        // both classification tiers must be live on this corpus
+        assert(batch.exists(_.isNullAt(4)), "no unclassified leading run")
+        assert(batch.exists(r => !r.isNullAt(4)), "no classified events")
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1092,34 +1003,26 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = VortexState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("vortex_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("vortex_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.vortexOhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      assert(batch.exists(_.isNullAt(2)), "first-bar NULL tier missing")
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = VortexState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("vortex_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("vortex_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.vortexOhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        assert(batch.exists(_.isNullAt(2)), "first-bar NULL tier missing")
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1136,33 +1039,25 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = CciState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("cci_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("cci_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.cciOhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = CciState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("cci_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("cci_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.cciOhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1179,36 +1074,28 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = KeltnerState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("kelt_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("kelt_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.keltnerOhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      // the zero-ATR-count edge: every ticker's first bar has NULL
-      // bands on both sides
-      assert(batch.exists(_.isNullAt(4)))
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = KeltnerState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("kelt_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("kelt_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.keltnerOhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        // the zero-ATR-count edge: every ticker's first bar has NULL
+        // bands on both sides
+        assert(batch.exists(_.isNullAt(4)))
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1364,33 +1251,25 @@ class TimeSeriesSpec extends SparkSpec {
     import spark.implicits._
     val rows = barsDf.as[BarRow].collect().sortBy(_.bucket.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BarRow]
-    val q = MacdState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("macd_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("macd_tws_sink")
-        .orderBy("ticker", "bucket").collect()
-      val batch = graft.operators.TimeSeries.macdBars(barsDf)
-        .orderBy("ticker", "bucket").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BarRow]
+      val q = MacdState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("macd_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("macd_tws_sink")
+          .orderBy("ticker", "bucket").collect()
+        val batch = graft.operators.TimeSeries.macdBars(barsDf)
+          .orderBy("ticker", "bucket").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1405,36 +1284,28 @@ class TimeSeriesSpec extends SparkSpec {
     import spark.implicits._
     val rows = barsDf.as[BarRow].collect().sortBy(_.bucket.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BarRow]
-    val q = RsiState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("rsi_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("rsi_tws_sink")
-        .orderBy("ticker", "bucket").collect()
-      val batch = graft.operators.TimeSeries.rsiBars(barsDf)
-        .orderBy("ticker", "bucket").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      // the leading edge must be exercised: every ticker's first bar
-      // is a NULL rsi on both sides
-      assert(batch.exists(_.isNullAt(3)))
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BarRow]
+      val q = RsiState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("rsi_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("rsi_tws_sink")
+          .orderBy("ticker", "bucket").collect()
+        val batch = graft.operators.TimeSeries.rsiBars(barsDf)
+          .orderBy("ticker", "bucket").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        // the leading edge must be exercised: every ticker's first bar
+        // is a NULL rsi on both sides
+        assert(batch.exists(_.isNullAt(3)))
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1449,36 +1320,28 @@ class TimeSeriesSpec extends SparkSpec {
     import spark.implicits._
     val rows = barsDf.as[BarRow].collect().sortBy(_.bucket.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BarRow]
-    val q = BollingerState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("boll_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("boll_tws_sink")
-        .orderBy("ticker", "bucket").collect()
-      val batch = graft.operators.TimeSeries.bollingerBars(barsDf)
-        .orderBy("ticker", "bucket").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      // the n = 1 edge must be exercised: every ticker's first bar has
-      // NULL bands on both sides
-      assert(batch.exists(_.isNullAt(4)))
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BarRow]
+      val q = BollingerState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("boll_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("boll_tws_sink")
+          .orderBy("ticker", "bucket").collect()
+        val batch = graft.operators.TimeSeries.bollingerBars(barsDf)
+          .orderBy("ticker", "bucket").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        // the n = 1 edge must be exercised: every ticker's first bar has
+        // NULL bands on both sides
+        assert(batch.exists(_.isNullAt(4)))
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1731,33 +1594,25 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = AtrState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("atr_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("atr_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.atrOhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = AtrState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("atr_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("atr_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.atrOhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1775,33 +1630,25 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = StochState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("stoch_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("stoch_tws_sink")
-        .orderBy("ticker", "window_timestamp").collect()
-      val batch = graft.operators.TimeSeries.stochasticOhlc(ohlcDf)
-        .orderBy("ticker", "window_timestamp").collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = StochState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("stoch_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("stoch_tws_sink")
+          .orderBy("ticker", "window_timestamp").collect()
+        val batch = graft.operators.TimeSeries.stochasticOhlc(ohlcDf)
+          .orderBy("ticker", "window_timestamp").collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1817,43 +1664,35 @@ class TimeSeriesSpec extends SparkSpec {
     val rows = barsDf.select("ticker", "bucket", "close")
       .as[CusumBar].collect().sortBy(_.bucket.getTime)
     val chunks = rows.grouped(math.max(rows.length / 4, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CusumBar]
-    val q = CusumState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("cusum_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val emitted = spark.table("cusum_tws_sink").collect()
-      // supersede convention: per ticker the NEWEST report (max n_rets)
-      // is the answer; older emissions are the same kernel over a prefix
-      val streamed = emitted.groupBy(_.getString(0)).map { case (_, rs) =>
-        rs.maxBy(_.getLong(1))
-      }.toSeq.sortBy(_.getString(0))
-      val batch = graft.operators.TimeSeries.cusumBars(barsDf).collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-      // reports only grow: each ticker's emissions have strictly
-      // increasing n_rets across the 4 triggers (every chunk adds bars)
-      emitted.groupBy(_.getString(0)).foreach { case (t, rs) =>
-        val ns = rs.map(_.getLong(1)).sorted
-        assert(ns.distinct.length === ns.length,
-          s"$t: duplicate n_rets across triggers: ${ns.toSeq}")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CusumBar]
+      val q = CusumState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("cusum_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val emitted = spark.table("cusum_tws_sink").collect()
+        // supersede convention: per ticker the NEWEST report (max n_rets)
+        // is the answer; older emissions are the same kernel over a prefix
+        val streamed = emitted.groupBy(_.getString(0)).map { case (_, rs) =>
+          rs.maxBy(_.getLong(1))
+        }.toSeq.sortBy(_.getString(0))
+        val batch = graft.operators.TimeSeries.cusumBars(barsDf).collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+        // reports only grow: each ticker's emissions have strictly
+        // increasing n_rets across the 4 triggers (every chunk adds bars)
+        emitted.groupBy(_.getString(0)).foreach { case (t, rs) =>
+          val ns = rs.map(_.getLong(1)).sorted
+          assert(ns.distinct.length === ns.length,
+            s"$t: duplicate n_rets across triggers: ${ns.toSeq}")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1871,35 +1710,27 @@ class TimeSeriesSpec extends SparkSpec {
       .select("ticker", "window_timestamp", "high", "low", "close")
       .as[OhlcRow].collect().sortBy(_.window_timestamp.getTime)
     val chunks = rows.grouped(math.max(rows.length / 4, 1)).toSeq
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
-    val q = CorwinSchultzState.attach(stream.toDS()).writeStream
-      .format("memory").queryName("cs_tws_sink")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c =>
-        stream.addData(c.toSeq: _*); q.processAllAvailable()
-      }
-      val streamed = spark.table("cs_tws_sink").collect()
-        .groupBy(_.getString(0)).map { case (_, rs) =>
-          rs.maxBy(_.getLong(1))
-        }.toSeq.sortBy(_.getString(0))
-      val batch = graft.operators.TimeSeries.corwinSchultzOhlc(ohlcDf)
-        .collect()
-      assert(streamed.length === batch.length && batch.nonEmpty)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(rocksDbStore) {
+      val stream =
+        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[OhlcRow]
+      val q = CorwinSchultzState.attach(stream.toDS()).writeStream
+        .format("memory").queryName("cs_tws_sink")
+        .outputMode("append").start()
+      try {
+        chunks.foreach { c =>
+          stream.addData(c.toSeq: _*); q.processAllAvailable()
+        }
+        val streamed = spark.table("cs_tws_sink").collect()
+          .groupBy(_.getString(0)).map { case (_, rs) =>
+            rs.maxBy(_.getLong(1))
+          }.toSeq.sortBy(_.getString(0))
+        val batch = graft.operators.TimeSeries.corwinSchultzOhlc(ohlcDf)
+          .collect()
+        assert(streamed.length === batch.length && batch.nonEmpty)
+        streamed.zip(batch).foreach { case (s, b) =>
+          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+        }
+      } finally q.stop()
     }
   }
 
