@@ -37,14 +37,14 @@ object Bench {
     // Untimed warm-up: JIT/codegen/parquet-footer caches, so the first
     // timed query isn't charged ~5 s of JVM start-up.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    // Some(seconds) on success, None on failure — a crashing query must
-    // never be recorded as a fast success.
+    // Right(seconds) on success, Left(exception) on failure — a crashing
+    // query must never be recorded as a fast success.
     def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Option[Double] = {
+        org.apache.spark.sql.DataFrame): Either[Throwable, Double] = {
       spark.sparkContext.setJobGroup(name, name)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case _: Throwable => None }
+      try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(e) }
       finally {
         spark.sparkContext.clearJobGroup()
         // Queries are self-contained, so any pin still live after the
@@ -72,11 +72,13 @@ object Bench {
     require(names.nonEmpty, s"SPARK_GRAFT_BENCH_ONLY=" +
       s"${only.map(_.mkString(",")).getOrElse("")} matches no query " +
       s"(roster has ${SparkEntry.queries.size})")
-    val samples: Seq[Seq[(String, Option[Double])]] =
+    val samples: Seq[Seq[(String, Either[Throwable, Double])]] =
       (1 to trials).map(_ => names.map { case (n, fn) => n -> timeOnce(n, fn) })
     val byName = samples.flatten.groupBy(_._1).map { case (n, ss) =>
-      n -> ss.flatMap(_._2)
+      n -> ss.flatMap(_._2.toOption)
     }
+    val firstError = samples.flatten.collect { case (n, Left(e)) => n -> e }
+      .groupBy(_._1).map { case (n, es) => n -> errorText(es.head._2) }
     val failed = names.map(_._1).filter(n => byName(n).isEmpty)
     val ok = names.map(_._1).filterNot(failed.contains)
     val qs = (ok.map(n => s"\"$n\":" + byName(n).min) ++
@@ -84,13 +86,15 @@ object Bench {
       .mkString("{", ",", "}")
     val total = ok.map(n => byName(n).min).sum
     val errs = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
+    val errText = failed.map(n => s"\"$n\":${jsonString(firstError(n))}")
+      .mkString("{", ",", "}")
     Thread.sleep(2000) // let async listener events drain
     val sh = names.map(_._1).map { n =>
       val mb = Option(shuffleBytes.get(n)).map(_.get).getOrElse(0L) /
         (1024.0 * 1024.0) / math.max(trials, 1)
       s"\"$n\":${math.rint(mb * 100) / 100}"
     }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errs,"shuffle_mb_per_trial":$sh,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errs,"error_text":$errText,"shuffle_mb_per_trial":$sh,"sf":"$sfDir"}"""
     // persist the full per-query map to cwd: the driver captures only a
     // tail of stdout, and round 3 lost the totals to truncation
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), json + "\n")
@@ -109,6 +113,21 @@ object Bench {
     println(json)
     if (failed.nonEmpty)
       System.err.println(s"BENCH FAILURES: ${failed.mkString(", ")}")
+    failed.foreach(n => System.err.println(s"BENCH FAILURE $n: ${firstError(n)}"))
     spark.stop()
   }
+
+  /** A failed query's reason as `bench.json` records it under
+    * `error_text`: the exception's class and the first 200 characters
+    * of its message. */
+  def errorText(e: Throwable): String =
+    s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(200)}"
+
+  /** `s` as a JSON string literal. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

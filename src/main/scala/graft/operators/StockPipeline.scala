@@ -234,8 +234,8 @@ object StockPipeline {
     joinedFromMinutes(minuteAggs(stock))
 
   /** The join/SMA stage over an already-materialized minute-aggregate
-    * table — the seam the streaming sink uses (its foreachBatch re-reads
-    * the finalized minute store and resumes the pipeline here). */
+    * table: the batch path's form, and the reference statement that
+    * [[analysisFromMinutes]] is tested against. */
   def joinedFromMinutes(minuteDf: DataFrame): DataFrame =
     minuteDf
       .select(col("*"), explode(sequence(lit(0), lit(4))).as("off"))
@@ -260,6 +260,34 @@ object StockPipeline {
         sentimentOf(col("latest_event_id")).as("ai_sentiment"),
         summaryOf(col("ticker"), col("latest_event_id")).as("ai_summary"),
         col("sma_5m"))
+
+  /** The 11-column analysis table straight from a minute-aggregate
+    * table with one row per (ticker, minute), in one shuffle by ticker
+    * and one window pass: the streaming sink's per-trigger rebuild.
+    * Equal row for row to `analysisFromJoined(joinedFromMinutes(m), now)`:
+    *   - `sma_5m` re-sums the decimal partials over a RANGE frame of the
+    *     4 preceding minutes, the same exact sums as the 5-row fan-out;
+    *   - the spike is [[withSpike]], the ROWS 10..1 PRECEDING form that
+    *     `SpikeParitySpec` proves equal to [[withSpikeBucketed]];
+    *   - `now` is the injected clock as a timestamp-valued column (a
+    *     literal), so no aggregate over the table is needed.
+    * Both windows partition by ticker alone, so the pass runs #tickers
+    * wide (the [[withSpike]] scale note); its input is minute-grade. */
+  def analysisFromMinutes(minuteDf: DataFrame, now: Column): DataFrame = {
+    def last5m(c: String): Column = expr(s"sum($c) OVER (PARTITION BY ticker " +
+      "ORDER BY window_timestamp RANGE BETWEEN INTERVAL 4 MINUTES PRECEDING " +
+      "AND CURRENT ROW)")
+    withSpike(minuteDf.withColumn("sma_5m", round(
+        last5m("sum_price_1m").cast("double") / last5m("n_events_1m"), 4)))
+      .select(
+        col("ticker"), col("window_timestamp"), col("latest_price"),
+        col("high_price_1m"), col("total_volume_1m"), col("total_value_1m"),
+        col("sma_5m"), col("is_volume_spike"),
+        (unix_timestamp(now) - unix_timestamp(col("window_timestamp")))
+          .cast("double").as("system_latency"),
+        sentimentOf(col("latest_event_id")).as("ai_sentiment"),
+        summaryOf(col("ticker"), col("latest_event_id")).as("ai_summary"))
+  }
 
   /** ST1: stateful volume-spike detection, batch form
     * (`DetectVolumeSpike`, `pipeline.py:19-41`). The reference keeps the
@@ -384,16 +412,15 @@ object StockPipeline {
       expr("INTERVAL 1 MINUTE")).as("now_ts"))
 
   /** Spike + injected-clock latency + 11-column format over a joined
-    * table — shared by the batch path and the streaming sink's
-    * foreachBatch rebuild. Uses the bucketed (scalable) spike form
+    * table: the batch path, and the reference statement for the
+    * streaming sink's [[analysisFromMinutes]]. Uses the bucketed (scalable) spike form
     * (partitioned by ticker × day-bucket; exact under the ≥10-rows-per-
     * bucket density precondition the test data satisfies from sf0.01 up
     * — SpikeParitySpec). The global-window statement is what the oracle
     * states; parity is proved row-for-row. */
   def analysisFromJoined(joinedDf: DataFrame): DataFrame =
     // spike preserves rows, so the max window end is joinedDf's own max
-    // (cheap when joinedDf is a materialized minute store — the
-    // streaming sink's case; the batch path passes nowOf(stock) instead)
+    // (the batch path passes nowOf(stock) instead)
     analysisFromJoined(joinedDf,
       joinedDf.agg(max(col("window_timestamp")).as("now_ts")))
 

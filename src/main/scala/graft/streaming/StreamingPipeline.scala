@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,9 +27,10 @@ import graft.Materialize.PinOps
   * The stream–stream join of two windowed aggregates (J1) is not
   * expressible as a single continuous plan (agg-after-agg restriction);
   * [[analysisSink]] therefore streams the watermarked minute aggregation
-  * (append mode = exactly-once finalized windows) and resumes the
-  * join/spike stages from a minute store inside `foreachBatch`
-  * (SURVEY.md §7.4) — see its doc for the exactly-once argument.
+  * (append mode = exactly-once finalized windows) into a minute store
+  * and rebuilds the SMA/spike analysis table from that store inside
+  * `foreachBatch` in one window pass (SURVEY.md §7.4) — see its doc
+  * for the exactly-once argument.
   *
   * Scale notes: state for the windowed aggs lives in the HDFS-backed
   * state store partitioned by (ticker, window) — the same hash layout as
@@ -192,28 +196,6 @@ object StreamingPipeline {
   def dedupStream(events: DataFrame, delay: String = "2 minutes"): DataFrame =
     events.withWatermark("ts", delay).dropDuplicatesWithinWatermark("event_id")
 
-  /** Full end-to-end streaming analysis, cross-batch exact:
-    *
-    *  1. The minute aggregation runs as a WATERMARKED STREAMING
-    *     aggregation in append mode — each (ticker, minute) row is
-    *     emitted exactly once, when the watermark finalizes its window.
-    *     Windows spanning triggers can therefore never emit duplicate or
-    *     partial rows (the state store, not the micro-batch boundary,
-    *     owns window completion).
-    *  2. foreachBatch lands each trigger's finalized minute rows in a
-    *     minute store (one `batch=<id>` partition per trigger, written
-    *     with overwrite — a replayed batch after failure overwrites its
-    *     own partition, so the store is exactly-once too).
-    *  3. The sliding join + spike + format resume from the FULL minute
-    *     store ([[StockPipeline.joinedFromMinutes]]), so SMA windows and
-    *     spike history see all history, not just the current batch; the
-    *     analysis sink is rebuilt by overwrite, which is idempotent.
-    *
-    * The rebuild cost is bounded by the minute-grade store (~|events| /
-    * events-per-minute, a ~100-1000× reduction) — at true cluster scale
-    * the same seam incrementalizes to a MERGE of only the w_ends the new
-    * minutes complete, with identical semantics. Returns the started
-    * query (caller awaits/stops). */
   /** True iff the index directory exists AND holds at least one
     * COMMITTED data file. A plain `fs.exists` is not enough: a
     * first-trigger crash mid-write can leave only `_temporary`
@@ -437,24 +419,98 @@ object StreamingPipeline {
         // 0, not NPE the monitoring consumer
         coalesce(sum(col("keep").cast("long")), lit(0L)).as("n_kept"))
 
+  /** A `batch=<id>`-partitioned parquet store of `schema` (its last
+    * field is the partition column), listed on the driver with one
+    * glob of the committed part files. `spark.read` would infer the
+    * schema with a job, and past `parallelPartitionDiscovery.threshold`
+    * (32) partition directories it lists them with a job too; a store
+    * that gains one directory per trigger crosses that after 32
+    * triggers. The glob skips `_temporary` droppings as the
+    * reader's hidden-path rule does; the listing goes to the file index
+    * as a one-entry cache, so nothing outlives the read. */
+  private def readStore(s: SparkSession, store: String,
+      schema: StructType): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val root = new Path(store)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(root)
+    val files = Option(fs.globStatus(new Path(qualified, "batch=*/part-*")))
+      .getOrElse(Array.empty[FileStatus])
+    val listed = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        Option.when(p == qualified)(files)
+      def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(s, Seq(qualified), Map.empty,
+      Some(schema), listed)
+    s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      StructType(schema.init), None, new ParquetFileFormat, Map.empty)(s))
+  }
+
   /** One trigger of [[analysisSink]]: land the trigger's finalized
     * minute rows in their own `batch=<id>` partition (overwrite — a
     * REPLAYED trigger after a mid-trigger kill overwrites its own
     * attempt, _temporary droppings included), then rebuild the analysis
-    * sink from the FULL minute store by overwrite. Both writes are
-    * idempotent in (batch, batchId), so a replay leaves the minute
-    * store and the analysis output byte-stable — factored out of the
-    * sink so that exactly-once argument is directly testable. */
+    * sink from the FULL minute store by overwrite
+    * ([[StockPipeline.analysisFromMinutes]]: one shuffle by ticker, one
+    * window pass). Both writes are idempotent in (batch, batchId), so a
+    * replay leaves the minute store and the analysis output
+    * byte-stable — factored out of the sink so that exactly-once
+    * argument is directly testable.
+    *
+    * A closing trigger runs two jobs, the two writes, and pins nothing:
+    *   - the injected clock `now` (the store's max window end) is
+    *     observed inside the minute write with `Dataset.observe`;
+    *   - the store is read with the batch's own schema plus `batch`
+    *     and listed on the driver ([[readStore]]), so neither a
+    *     schema-inference nor a listing job runs.
+    *
+    * Precondition for that `now`: the batches arrive as an append-mode
+    * watermarked aggregation emits them. Each trigger then closes only
+    * windows later than every window closed before it, so the batch's
+    * max window end is the store's max; a replay of the latest trigger
+    * observes the same max. An empty batch (nothing observed) falls
+    * back to an aggregate over the store; an observation that has not
+    * arrived 30 s after the write fails the trigger. */
   def analysisBatch(batch: DataFrame, batchId: Long, minuteStore: String,
       outPath: String): Unit = {
-    batch.write.mode("overwrite").parquet(s"$minuteStore/batch=$batchId")
-    val allMinutes = batch.sparkSession.read.parquet(minuteStore)
-      .drop("batch")
-    StockPipeline.analysisFromJoined(
-        StockPipeline.joinedFromMinutes(allMinutes))
+    val closed = Observation()
+    batch.observe(closed, max(col("window_timestamp")))
+      .write.mode("overwrite").parquet(s"$minuteStore/batch=$batchId")
+    val allMinutes = readStore(batch.sparkSession, minuteStore,
+      batch.schema.add("batch", LongType)).drop("batch")
+    val now = Option(Await.result(closed.future, 30.seconds).get(0))
+      .getOrElse(allMinutes.agg(max(col("window_timestamp"))).head().get(0))
+    StockPipeline.analysisFromMinutes(allMinutes, lit(now))
       .write.mode("overwrite").parquet(outPath)
   }
 
+  /** Full end-to-end streaming analysis, cross-batch exact:
+    *
+    *  1. The minute aggregation runs as a WATERMARKED STREAMING
+    *     aggregation in append mode — each (ticker, minute) row is
+    *     emitted exactly once, when the watermark finalizes its window.
+    *     Windows spanning triggers can therefore never emit duplicate or
+    *     partial rows (the state store, not the micro-batch boundary,
+    *     owns window completion).
+    *  2. foreachBatch lands each trigger's finalized minute rows in a
+    *     minute store (one `batch=<id>` partition per trigger, written
+    *     with overwrite — a replayed batch after failure overwrites its
+    *     own partition, so the store is exactly-once too).
+    *  3. The SMA, spike and format run over the FULL minute store
+    *     ([[StockPipeline.analysisFromMinutes]]), so SMA windows and
+    *     spike history see all history, not just the current batch; the
+    *     analysis sink is rebuilt by overwrite, which is idempotent.
+    *
+    * The rebuild reads the minute-grade store (~|events| /
+    * events-per-minute, a ~100-1000× reduction). It must rewrite every
+    * row each trigger anyway: `system_latency` is relative to the
+    * store's max window end, which every closing trigger moves. Returns
+    * the started query (caller awaits/stops). */
   def analysisSink(spark: SparkSession, inputDir: String, outPath: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val minuteStore = outPath + "_minutes"

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The harness's input checks (no Spark session needed). */
+/** The harness's input checks and record formatting (no Spark session
+  * needed). */
 class BenchSpec extends AnyFunSuite {
 
   test("SPARK_GRAFT_CPUS parses as a positive Int and fails clearly " +
@@ -13,5 +14,17 @@ class BenchSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](GraftSession.parseCpus(bad))
       assert(e.getMessage.contains(s"got '$bad'"), e.getMessage)
     }
+  }
+
+  test("error_text keeps a failed query's exception class and the first " +
+      "200 characters of its message, as a valid JSON string") {
+    val e = new IllegalStateException("bad \"plan\"\n\tat C:\\x " + "y" * 300)
+    val text = Bench.errorText(e)
+    assert(text === "java.lang.IllegalStateException: " + e.getMessage.take(200))
+    assert(Bench.errorText(new RuntimeException) === "java.lang.RuntimeException: ")
+    assert(Bench.jsonString("a\"b\\c\nd") === "\"a\\\"b\\\\c\\u000ad\"")
+    // parses back to the same text with a real JSON reader
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(json.readValue(Bench.jsonString(text), classOf[String]) === text)
   }
 }

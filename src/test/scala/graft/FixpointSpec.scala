@@ -1,12 +1,5 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -28,44 +21,6 @@ class FixpointSpec extends SparkSpec {
     Similarity.kcorePeel(pathTriangle.toDF("vec_a", "vec_b"),
         localMaxEdges = localMaxEdges)
       .collect().filter(_.getBoolean(3)).map(_.getLong(0)).toSet
-
-  /** Jobs and SQL-execution descriptions `body` runs, attributed by job
-    * group. A marker job after `body` drains the listener bus: events
-    * arrive in order, so once the marker is seen every earlier event
-    * has been counted. */
-  private def counted(tag: String)(body: => Unit): (Int, Seq[String]) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val execs = new ConcurrentLinkedQueue[String]
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`tag`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$tag-drain" => drained.countDown()
-          case _ =>
-        }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(tag) =>
-          execs.add(s.description)
-        case _ =>
-      }
-    }
-    // the group id alone, not setJobGroup: its description would
-    // replace each execution's call site, which the guard reads
-    def inGroup(g: String)(f: => Unit): Unit = {
-      sc.setLocalProperty("spark.jobGroup.id", g)
-      try f finally sc.setLocalProperty("spark.jobGroup.id", null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      inGroup(tag)(body)
-      inGroup(s"$tag-drain")(sc.parallelize(Seq(1), 1).count())
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (jobs.get, execs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a step that never converges fails with the max-rounds message") {
     val s0 = Fixpoint.start(Seq(1L, 2L, 3L).toDF("x"),

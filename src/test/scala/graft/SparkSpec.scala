@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, getOrCreate). */
@@ -23,6 +30,50 @@ trait SparkSpec extends AnyFunSuite {
   def withProp[A](kvs: (String, String)*)(body: => A): A =
     SparkSpec.withSaved(kvs)(sys.props.get, sys.props.update,
       k => sys.props.remove(k))(body)
+
+  /** Runs `f` with this thread's job group set to `group`, then clears
+    * it. The group id alone, not setJobGroup: its description would
+    * replace each execution's call site, which the guards read. */
+  def inGroup[A](group: String)(f: => A): A = {
+    val sc = spark.sparkContext
+    val saved = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try f finally sc.setLocalProperty("spark.jobGroup.id", saved)
+  }
+
+  /** Jobs and SQL-execution descriptions attributed to job group `tag`
+    * while `body` runs in that group (code on other threads, such as a
+    * streaming query's foreachBatch, joins it with [[inGroup]]). A
+    * marker job after `body` drains the listener bus: events arrive in
+    * order, so once the marker is seen every earlier event has been
+    * counted. */
+  def counted(tag: String)(body: => Unit): (Int, Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val execs = new ConcurrentLinkedQueue[String]
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$tag-drain" => drained.countDown()
+          case _ =>
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(tag) =>
+          execs.add(s.description)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup(tag)(body)
+      inGroup(s"$tag-drain")(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (jobs.get, execs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

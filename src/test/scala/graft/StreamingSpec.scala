@@ -2,6 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -11,6 +14,12 @@ import graft.streaming.{SpikeState, StreamingPipeline, VolumeRow}
 
 case class RawEvent(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
+
+/** One row of `StockPipeline.minuteAggs` (the sink's minute store). */
+case class MinuteRow(ticker: String, window_timestamp: Timestamp,
+    latest_price: Double, high_price_1m: Double, total_volume_1m: Long,
+    total_value_1m: Double, latest_event_id: Long,
+    sum_price_1m: java.math.BigDecimal, n_events_1m: Long)
 
 /** Stream/batch parity tests (SURVEY.md §5.4): the same transforms run
   * under MemoryStream must produce exactly the batch results. */
@@ -379,6 +388,127 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** The store and table of one [[StreamingPipeline.analysisBatch]]
+    * sink fed by `minutes`, each non-empty trigger running `sink` (the
+    * batch, its id) inside foreachBatch. */
+  private def minuteSink(minutes: DataFrame, tmp: String)(
+      sink: (DataFrame, Long) => Unit) =
+    minutes.writeStream.outputMode("append")
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        if (!batch.isEmpty) sink(batch, id)
+        ()
+      }
+      .start()
+
+  test("analysis sink: after every closing trigger the table equals the " +
+      "batch statement over the minute store on all 11 columns, across " +
+      "gaps, late-starting tickers and single-ticker triggers") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sink-exact").toString
+    val (store, out) = (s"$tmp/minutes", s"$tmp/out")
+    val stream = MemoryStream[RawEvent]
+    // per closing trigger: (batch id, tickers it closed, table, reference)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (Long, Set[String], Seq[Row], Seq[Row])]()
+    def rows(df: DataFrame): Seq[Row] =
+      df.orderBy("ticker", "window_timestamp").collect().toSeq
+    val q = minuteSink(StockPipeline.minuteAggs(
+        StreamingPipeline.withEventTime(stream.toDF())), tmp) { (batch, id) =>
+      StreamingPipeline.analysisBatch(batch, id, store, out)
+      val s = batch.sparkSession
+      val expect = StockPipeline.analysisFromJoined(
+        StockPipeline.joinedFromMinutes(s.read.parquet(store).drop("batch")))
+      seen.add((id, batch.select("ticker").distinct().collect()
+        .map(_.getString(0)).toSet, rows(s.read.parquet(out)), rows(expect)))
+    }
+    // one tick per (ticker, minute) at second 20; price and volume vary
+    // so that SMA sums are inexact in binary and spikes fire
+    var id = 0L
+    def ticks(ticker: String, minutes: Seq[Int]): Seq[RawEvent] =
+      minutes.map { m =>
+        id += 1
+        ev(id, f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:20", ticker,
+          10.0 + (m * 7 % 13) * 0.1 + (ticker.head - 'A'),
+          if (m % 9 == 4) 900 else 10 + m % 5)
+      }
+    try {
+      // 1: A and B open; B then stays silent for 20 minutes
+      stream.addData(ticks("A", 0 to 8) ++ ticks("B", 0 to 3): _*)
+      q.processAllAvailable()
+      // 2: C's first minute arrives
+      stream.addData(ticks("A", 9 to 14) ++ ticks("C", 9 to 10): _*)
+      q.processAllAvailable()
+      // 3: only A has minutes behind the new watermark
+      stream.addData(ticks("A", 15 to 22): _*)
+      q.processAllAvailable()
+      // 4: B returns after its gap, with history older than 10 minutes
+      stream.addData(ticks("A", 23 to 30) ++ ticks("B", 24 to 27) ++
+        ticks("C", 25 to 26): _*)
+      q.processAllAvailable()
+      // 5: a sentinel closes what is left
+      stream.addData(ticks("A", Seq(40)): _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val closing = seen.asScala.toSeq.sortBy(_._1)
+    assert(closing.size >= 4, closing.map(c => (c._1, c._2)))
+    assert(closing.exists(_._2 == Set("A")), "no trigger closed only A: " +
+      closing.map(c => (c._1, c._2)))
+    assert(closing.last._3.map(_.getString(0)).toSet === Set("A", "B", "C"))
+    closing.foreach { case (b, _, got, expect) =>
+      assert(got.nonEmpty)
+      assert(got === expect, s"trigger $b")
+    }
+    assert(closing.last._3.exists(_.getBoolean(7)), "no spike was raised")
+    // an empty batch observes no clock: it falls back to the store's max
+    StreamingPipeline.analysisBatch(spark.read.parquet(store).drop("batch")
+      .filter(col("n_events_1m") < 0), 99, store, out)
+    assert(rows(spark.read.parquet(out)) === closing.last._4)
+  }
+
+  test("analysis sink cost guard: a closing trigger runs at most 2 jobs " +
+      "and pins nothing, after 3 and after 40 earlier triggers") {
+    implicit val sqlCtx = spark.sqlContext
+    val tickers = Seq("A", "B", "C")
+    for (prior <- Seq(3, 40)) withClue(s"$prior earlier triggers: ") {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-sink-cost").toString
+      val (store, out) = (s"$tmp/minutes", s"$tmp/out")
+      // the earlier triggers' partitions: trigger m closed minute m of
+      // every ticker
+      val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+      (0 until prior).flatMap(m => tickers.map(t => (m.toLong, MinuteRow(t,
+          new Timestamp(t0 + (m + 1) * 60000L), 10.0 + m, 11.0 + m, 5L + m,
+          50.0 + m, m.toLong, new java.math.BigDecimal(10 + m), 1L))))
+        .toDF("batch", "r").select(col("r.*"), col("batch"))
+        .write.partitionBy("batch").parquet(store)
+      // the streaming aggregation is stateful, so its micro-batches run
+      // with AQE off, as the sink's do
+      val stream = MemoryStream[RawEvent]
+      val pins = new java.util.concurrent.atomic.AtomicInteger(-1)
+      val q = minuteSink(StockPipeline.minuteAggs(
+          StreamingPipeline.withEventTime(stream.toDF())), tmp) { (batch, id) =>
+        val sc = batch.sparkSession.sparkContext
+        val before = sc.getPersistentRDDs.size
+        inGroup("sink-cost") {
+          StreamingPipeline.analysisBatch(batch, prior + id, store, out)
+        }
+        pins.set(sc.getPersistentRDDs.size - before)
+      }
+      try {
+        val (jobs, execs) = counted("sink-cost") {
+          // minute `prior` of every ticker, closed by a later tick of Z
+          stream.addData(tickers.zipWithIndex.map { case (t, i) =>
+            ev(i, f"2024-01-01 00:$prior%02d:20", t, 10.0 + i, 7) } :+
+            ev(9, f"2024-01-01 00:${prior + 3}%02d:30", "Z", 1.0, 1): _*)
+          q.processAllAvailable()
+        }
+        assert(pins.get === 0, "pins added by the closing trigger")
+        assert(jobs <= 2, s"the closing trigger ran $jobs jobs: $execs")
+      } finally q.stop()
+      assert(spark.read.parquet(out).count() === 3L * (prior + 1))
+    }
+  }
+
   test("curated refresh: a crashed first trigger leaving only _temporary " +
       "droppings reads as 'no index yet' and recovers on retry") {
     // same committed-file discipline as the ingest sink: exists-but-no-
@@ -627,7 +757,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("heavy hitters (space-saving, transformWithState): exact when " +
+  test("heavy hitters (space-saving, KeyedFold): exact when " +
       "capacity covers the keys; guarantees hold when it does not") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{HeavyHitters, HhEvent}
