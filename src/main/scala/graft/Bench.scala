@@ -1,8 +1,9 @@
 package graft
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -11,36 +12,19 @@ object Bench {
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt
     val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // Shuffle accounting per query (job-group attribution): measured,
+    // Scheduler counts per query (job-group attribution): measured,
     // not guessed — lets a round-over-round diff spot a plan regression
-    // (new shuffle) even when wall-clock noise hides it.
-    val stageToQuery = new ConcurrentHashMap[Int, String]()
-    val shuffleBytes = new ConcurrentHashMap[String, AtomicLong]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(job: SparkListenerJobStart): Unit = {
-        val group = Option(job.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
-        if (group != null) job.stageIds.foreach(stageToQuery.put(_, group))
-      }
-      override def onStageCompleted(stage: SparkListenerStageCompleted): Unit = {
-        val q = stageToQuery.get(stage.stageInfo.stageId)
-        if (q != null) {
-          val m = stage.stageInfo.taskMetrics
-          if (m != null) {
-            shuffleBytes.computeIfAbsent(q, _ => new AtomicLong).addAndGet(
-              m.shuffleReadMetrics.totalBytesRead +
-                m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      }
-    })
+    // (new shuffle, more jobs) even when wall-clock noise hides it.
+    val profiler = new Profiler
+    spark.sparkContext.addSparkListener(profiler)
     // Untimed warm-up: JIT/codegen/parquet-footer caches, so the first
     // timed query isn't charged ~5 s of JVM start-up.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    val calibration = calibrationMs(spark)
     // Right(seconds) on success, Left(exception) on failure — a crashing
     // query must never be recorded as a fast success.
-    def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Either[Throwable, Double] = {
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame)
+        : Either[Throwable, Double] = {
       spark.sparkContext.setJobGroup(name, name)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
@@ -72,32 +56,66 @@ object Bench {
     require(names.nonEmpty, s"SPARK_GRAFT_BENCH_ONLY=" +
       s"${only.map(_.mkString(",")).getOrElse("")} matches no query " +
       s"(roster has ${SparkEntry.queries.size})")
-    val samples: Seq[Seq[(String, Either[Throwable, Double])]] =
-      (1 to trials).map(_ => names.map { case (n, fn) => n -> timeOnce(n, fn) })
-    val byName = samples.flatten.groupBy(_._1).map { case (n, ss) =>
-      n -> ss.flatMap(_._2.toOption)
-    }
-    val firstError = samples.flatten.collect { case (n, Left(e)) => n -> e }
-      .groupBy(_._1).map { case (n, es) => n -> errorText(es.head._2) }
-    val failed = names.map(_._1).filter(n => byName(n).isEmpty)
-    val ok = names.map(_._1).filterNot(failed.contains)
-    val qs = (ok.map(n => s"\"$n\":" + byName(n).min) ++
-        failed.map(n => s"\"$n\":-1"))
-      .mkString("{", ",", "}")
-    val total = ok.map(n => byName(n).min).sum
-    val errs = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
-    val errText = failed.map(n => s"\"$n\":${jsonString(firstError(n))}")
-      .mkString("{", ",", "}")
-    Thread.sleep(2000) // let async listener events drain
-    val sh = names.map(_._1).map { n =>
-      val mb = Option(shuffleBytes.get(n)).map(_.get).getOrElse(0L) /
-        (1024.0 * 1024.0) / math.max(trials, 1)
-      s"\"$n\":${math.rint(mb * 100) / 100}"
-    }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errs,"error_text":$errText,"shuffle_mb_per_trial":$sh,"sf":"$sfDir"}"""
-    // persist the full per-query map to cwd: the driver captures only a
-    // tail of stdout, and round 3 lost the totals to truncation
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), json + "\n")
+    val samples = (1 to trials).flatMap(_ =>
+      names.map { case (n, fn) => n -> timeOnce(n, fn) })
+    profiler.drain(spark.sparkContext)
+    val outcomes = samples.groupMap(_._1)(_._2)
+    val results = names.map { case (n, _) => Result(n, outcomes(n), profiler(n)) }
+    val (compact, line, record) = render(sfDir, cpus, trials, calibration, results)
+    // persist the full record to cwd: callers that keep only a tail of
+    // stdout lost the totals to truncation in round 3
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), record + "\n")
+    println(compact)
+    println(line)
+    val failed = results.filter(_.walls.isEmpty)
+    if (failed.nonEmpty)
+      System.err.println(s"BENCH FAILURES: ${failed.map(_.name).mkString(", ")}")
+    failed.foreach(r => System.err.println(s"BENCH FAILURE ${r.name}: ${r.error}"))
+    spark.stop()
+  }
+
+  /** One query's trials in run order and its [[Profile]] summed over
+    * them. */
+  final case class Result(name: String,
+      outcomes: Seq[Either[Throwable, Double]], profile: Profile) {
+    /** Wall seconds of the successful trials, in run order. */
+    def walls: Seq[Double] = outcomes.flatMap(_.toOption)
+    /** [[errorText]] of the first failed trial; empty if none failed. */
+    def error: String =
+      outcomes.collectFirst { case Left(e) => errorText(e) }.getOrElse("")
+  }
+
+  /** The run's three records: the compact stdout header, the canonical
+    * stdout tail line, and `bench.json`. `bench.json` is the tail line
+    * plus the per-query `profile` (walls, and per trial: jobs, stages,
+    * tasks, task-seconds, spill MB) and `calibration_ms`; they stay off
+    * stdout, so the parsed tail line keeps its size. */
+  def render(sfDir: String, cpus: Int, trials: Int, calibrationMs: Double,
+      results: Seq[Result]): (String, String, String) = {
+    val (failed, ok) = results.partition(_.walls.isEmpty)
+    def best(r: Result) = r.walls.min
+    def r2(x: Double) = math.rint(x * 100) / 100
+    def perTrial(x: Double) = r2(x / math.max(trials, 1))
+    def obj(fields: Seq[String]) = fields.mkString("{", ",", "}")
+    val mb = 1024.0 * 1024.0
+    val total = ok.map(best).sum
+    val qs = obj(ok.map(r => s"\"${r.name}\":${best(r)}") ++
+      failed.map(r => s"\"${r.name}\":-1"))
+    val errs = failed.map(r => s"\"${r.name}\"").mkString("[", ",", "]")
+    val errText = obj(failed.map(r =>
+      s"\"${r.name}\":${jsonString(r.error)}"))
+    val sh = obj(results.map(r =>
+      s"\"${r.name}\":${perTrial(r.profile.shuffleBytes / mb)}"))
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errs,"error_text":$errText,"shuffle_mb_per_trial":$sh,"sf":"$sfDir"}"""
+    val profile = obj(results.map { r =>
+      val p = r.profile
+      s"\"${r.name}\":{\"walls\":${r.walls.mkString("[", ",", "]")}," +
+        s"\"jobs\":${perTrial(p.jobs)},\"stages\":${perTrial(p.stages)}," +
+        s"\"tasks\":${perTrial(p.tasks)},\"task_s\":${perTrial(p.taskMs / 1e3)}," +
+        s"\"spill_mb\":${perTrial(p.spillBytes / mb)}}"
+    })
+    val record = line.dropRight(1) +
+      s""","profile":$profile,"calibration_ms":${r2(calibrationMs)}}"""
     // Compact bounded-size summary FIRST, full per-query map LAST: the
     // round-12 cross-round PERF diff matched zero queries because the
     // r11 tail-capture latched onto the compact line and the r12 one
@@ -105,16 +123,90 @@ object Bench {
     // per-query map; the compact line survives only as a human-readable
     // header. Top-5 slowest included so the headline costs are visible
     // at a glance.
-    val top5 = ok.sortBy(n => -byName(n).min).take(5)
-      .map(n => s"\"$n\":${math.rint(byName(n).min * 100) / 100}")
-      .mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n":${names.size},"cpus":$cpus,"errors":$errs,"slowest":$top5,"sf":"$sfDir","full":"bench.json"}"""
-    println(compact)
-    println(json)
-    if (failed.nonEmpty)
-      System.err.println(s"BENCH FAILURES: ${failed.mkString(", ")}")
-    failed.foreach(n => System.err.println(s"BENCH FAILURE $n: ${firstError(n)}"))
-    spark.stop()
+    val top5 = obj(ok.sortBy(r => -best(r)).take(5)
+      .map(r => s"\"${r.name}\":${r2(best(r))}"))
+    val compact = s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n":${results.size},"cpus":$cpus,"errors":$errs,"slowest":$top5,"sf":"$sfDir","full":"bench.json"}"""
+    (compact, line, record)
+  }
+
+  /** Fixed cost of one trivial job on the warmed session, in ms: the
+    * median of five, run ungrouped. Stamped into `bench.json` so runs
+    * from different host windows can be compared. */
+  def calibrationMs(spark: SparkSession): Double = {
+    val ms = (1 to 5).map { _ =>
+      val t0 = System.nanoTime()
+      spark.range(1).count()
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    ms(2)
+  }
+
+  /** One query's scheduler counts: jobs started, stages completed, the
+    * tasks and task time of those stages, shuffle read + write bytes
+    * and disk-spill bytes. */
+  final case class Profile(jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
+      taskMs: Long = 0, shuffleBytes: Long = 0, spillBytes: Long = 0) {
+    def +(o: Profile): Profile = Profile(jobs + o.jobs, stages + o.stages,
+      tasks + o.tasks, taskMs + o.taskMs, shuffleBytes + o.shuffleBytes,
+      spillBytes + o.spillBytes)
+  }
+
+  /** Sums a [[Profile]] per job group: each job, and each stage it
+    * runs, counts toward the group that started it (Bench runs every
+    * query in a group of its name). Jobs without a group count toward
+    * none. */
+  final class Profiler extends SparkListener {
+    private val stageGroup = new ConcurrentHashMap[Int, String]()
+    private val counts = new ConcurrentHashMap[String, Profile]()
+    private val markers = new ConcurrentHashMap[String, CountDownLatch]()
+    private val markerJobs = new ConcurrentHashMap[Int, CountDownLatch]()
+
+    /** Counts so far for `group`; zero if it ran nothing. */
+    def apply(group: String): Profile = counts.getOrDefault(group, Profile())
+
+    override def onJobStart(job: SparkListenerJobStart): Unit = {
+      val prop = (k: String) =>
+        Option(job.properties).flatMap(p => Option(p.getProperty(k)))
+      prop("spark.jobGroup.id").foreach { g =>
+        counts.merge(g, Profile(jobs = 1), _ + _)
+        job.stageIds.foreach(stageGroup.put(_, g))
+      }
+      prop("spark.job.description").flatMap(d => Option(markers.remove(d)))
+        .foreach(markerJobs.put(job.jobId, _))
+    }
+
+    override def onJobEnd(job: SparkListenerJobEnd): Unit =
+      Option(markerJobs.remove(job.jobId)).foreach(_.countDown())
+
+    override def onStageCompleted(stage: SparkListenerStageCompleted): Unit = {
+      val info = stage.stageInfo
+      Option(stageGroup.get(info.stageId)).foreach { g =>
+        val m = Option(info.taskMetrics)
+        counts.merge(g, Profile(stages = 1, tasks = info.numTasks,
+          taskMs = m.fold(0L)(_.executorRunTime),
+          shuffleBytes = m.fold(0L)(t =>
+            t.shuffleReadMetrics.totalBytesRead + t.shuffleWriteMetrics.bytesWritten),
+          spillBytes = m.fold(0L)(_.diskBytesSpilled)), _ + _)
+      }
+    }
+
+    /** Returns once every event posted before the call has reached this
+      * listener: runs one ungrouped marker job, described by a fresh
+      * token, and waits until its end is seen. The bus delivers events
+      * in order, so by then every earlier job's stages have been
+      * counted. A sleep guarantees nothing of the kind. */
+    def drain(sc: SparkContext, timeoutS: Long = 60): Unit = {
+      val token = s"graft-drain-${java.util.UUID.randomUUID}"
+      val seen = new CountDownLatch(1)
+      markers.put(token, seen)
+      val saved = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(token)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(saved)
+      if (!seen.await(timeoutS, TimeUnit.SECONDS))
+        throw new IllegalStateException(
+          s"listener bus did not deliver the drain marker within $timeoutS s")
+    }
   }
 
   /** A failed query's reason as `bench.json` records it under

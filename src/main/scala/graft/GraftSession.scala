@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession builder of the harness mains: `local[cpus]`
   * with as many shuffle partitions, UTC session time, no UI, and the
-  * [[GraftExtensions]]; `conf` adds or overrides settings. */
+  * [[GraftExtensions]]. */
 object GraftSession {
 
   /** `SPARK_GRAFT_CPUS` as a positive Int. It goes into `local[n]`,
@@ -19,14 +19,11 @@ object GraftSession {
   def cpus(default: Int): Int =
     parseCpus(sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString))
 
-  def apply(cpus: Int, conf: (String, String)*): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    conf.foreach { case (k, v) => builder.config(k, v) }
-    builder.getOrCreate()
-  }
+  def apply(cpus: Int): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.extensions", "graft.GraftExtensions")
+    .getOrCreate()
 }

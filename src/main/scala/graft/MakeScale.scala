@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize an N×-scaled copy of a testdata sfDir as
   * parquet (e.g. sf0.1 × 10 ≈ sf1) so `graft.Bench` can produce a
-  * measured second scaling point for the heavy composites — turning
-  * the "linear by design" ScaleProbe claims into a bench-recorded
-  * datum. The growth transforms are the [[ScaleProbe]] recipes
-  * (cardinality grows with the data, not just row density), applied
-  * with referential integrity: every copy shifts its keys by the same
-  * k·10⁹ across fact and dimension tables, so joins keep matching.
+  * measured second scaling point for the heavy composites
+  * (`SPARK_GRAFT_BENCH_ONLY` restricts Bench to the queries under
+  * study; `bench.json`'s `profile` gives each one's jobs, stages, tasks
+  * and task-seconds). Cardinality grows with the data, not just row
+  * density, and referential integrity holds: every copy shifts its
+  * keys by the same k·10⁹ across fact and dimension tables, so joins
+  * keep matching.
   * Fixed-size dimensions (region, nation) are written once, as in
   * TPC-H. Run:
   * `sbt "runMain graft.MakeScale <sfDir> <outDir> <multiple>"`. */
@@ -53,8 +54,6 @@ object MakeScale {
     // events: time-shifted copies (window/key cardinality grows);
     // user_id shifts with the copy so the USER universe scales N× like
     // every other entity — per-user history length stays realistic
-    // (ScaleProbe's asof mode deliberately keeps users FIXED to stress
-    // that axis; this tool emulates real growth instead)
     write("events", k => Tables.events(spark, sfDir)
       .withColumn("ts", col("ts") + make_interval(
         lit(0), lit(0), lit(0), lit(31 * k), lit(0), lit(0)))

@@ -456,15 +456,16 @@ object Similarity {
     * documenting it — with fixed cells the in-cell candidate volume is
     * n²/cells, measured 11–21× super-linear at 10× data, while under
     * the rule the same queries are near-flat per row (BASELINE.md sf1
-    * table and the 1/4/16× graph-mode ScaleProbe curves). */
+    * table, and the 1/4/16× graph-mode scaling curves measured in
+    * round 8). */
   val autoCells: Int = -1
 
   /** Vectors per IVF cell the sizing rule targets. 500 anchors the
-    * derivation to the measured ScaleProbe curves (2k→32k vectors at
-    * cells 4→64 = 500/cell) AND keeps every existing oracle valid:
-    * the sf0.01 corpus (500 vectors) and the sf0.1 corpus (2000)
-    * both derive exactly [[kmK]]=4 cells, which is the k the oracles
-    * unroll Lloyd at. */
+    * derivation to the round-8 scaling curves (BASELINE.md: 2k→32k
+    * vectors at cells 4→64 = 500/cell) AND keeps every existing
+    * oracle valid: the sf0.01 corpus (500 vectors) and the sf0.1
+    * corpus (2000) both derive exactly [[kmK]]=4 cells, which is the
+    * k the oracles unroll Lloyd at. */
   val targetCellSize = 500L
 
   /** The sizing rule: `max(kmK, ceil(n / targetCellSize))`, capped to
@@ -2675,9 +2676,9 @@ object Similarity {
     * k-bounded; in-degree is NOT). That sum is the true output bound
     * for any exact SNN — no join strategy shrinks it. The per-key
     * straggler risk (one hub key's indeg² pairs in one task) is
-    * handled at RUNTIME by AQE's skew-join split, and the hub-axis
-    * ScaleProbe measured that as the better plan: an explicit
-    * hot/cold broadcast split ([[snnSharedCounts]] with
+    * handled at RUNTIME by AQE's skew-join split, and a past hub-axis
+    * scaling probe (BASELINE.md) measured that as the better plan: an
+    * explicit hot/cold broadcast split ([[snnSharedCounts]] with
     * hotK = [[snnHotKeys]]) ran 15–40 % SLOWER than the plain join +
     * AQE at every probe point (2k/8k/16k nodes, single 2M–128M-pair
     * hub), because the split pays an extra degree scan, pin and

@@ -301,10 +301,10 @@ object StockPipeline {
     * carries the history as real keyed state, runs on any state-store
     * provider, and is parity-tested against this form.
     *
-    * Scale ceiling (measured by `graft.ScaleProbe`): this window
-    * partitions by `ticker` — low cardinality (5 here) caps the stage's
-    * parallelism at #tickers, each task sorting its ticker's minute
-    * rows. Linear through 64× locally (minute-grade data is ~1000×
+    * Scale ceiling (measured by a past scaling probe, BASELINE.md):
+    * this window partitions by `ticker` — low cardinality (5 here)
+    * caps the stage's parallelism at #tickers, each task sorting its
+    * ticker's minute rows. Linear through 64× locally (minute-grade data is ~1000×
     * smaller than raw events), but on a real cluster with few keys the
     * streaming twin (incremental state; it sorts only each trigger's
     * new rows per key) or a time-bucketed
@@ -323,8 +323,8 @@ object StockPipeline {
 
   /** ST1 at scale: the same spike rule with the window partitioned by
     * (ticker, time-bucket) instead of ticker alone — parallelism becomes
-    * #tickers × #buckets instead of #tickers (the ceiling measured by
-    * `graft.ScaleProbe`). Exactness across bucket boundaries comes from
+    * #tickers × #buckets instead of #tickers (the ceiling [[withSpike]]
+    * documents). Exactness across bucket boundaries comes from
     * carrying, into EVERY non-empty bucket, the ticker's globally-last
     * 10 rows that precede it, as frame-only rows (they feed the
     * ROWS 10 PRECEDING frame, then are dropped from the output).

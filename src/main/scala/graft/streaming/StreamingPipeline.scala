@@ -68,11 +68,6 @@ object StreamingPipeline {
   def sma5mStream(eventsWithWatermark: DataFrame): DataFrame =
     StockPipeline.sma5m(eventsWithWatermark)
 
-  /** S3 replay source: a `rate` stream deterministically indexing into
-    * the historical events table — one micro-batch of bars per trigger,
-    * replaying history as live data (`main.py:70-75`). Small recordings
-    * broadcast; past [[replayBroadcastMaxRows]] the idx join degrades
-    * to an ordinary shuffled equi join (see [[joinBars]]). */
   /** Bars with a contiguous replay index 0..n-1 in (ts, event_id)
     * order — fully declarative two-level band scan (the
     * [[graft.operators.Packing.packAssign]] pattern): equal-width ts
@@ -130,6 +125,11 @@ object StreamingPipeline {
     if (n <= replayBroadcastMaxRows) ticks.join(broadcast(bars), Seq("idx"))
     else ticks.join(bars, Seq("idx"))
 
+  /** S3 replay source: a `rate` stream deterministically indexing into
+    * the historical events table — one micro-batch of bars per trigger,
+    * replaying history as live data (`main.py:70-75`). Small recordings
+    * broadcast; past [[replayBroadcastMaxRows]] the idx join degrades
+    * to an ordinary shuffled equi join (see [[joinBars]]). */
   def replayStream(spark: SparkSession, dir: String,
       rowsPerSecond: Int = 100): DataFrame = {
     val bars = indexedBars(spark, dir)
@@ -277,25 +277,6 @@ object StreamingPipeline {
       }
       .start()
 
-  /** One trigger of [[ingestSpanDedupSink]] — SPAN-level streaming
-    * dedup, the streaming twin of [[graft.operators.Dedup.spanDedup]]:
-    * incoming documents are cut into fixed-width token spans; a span
-    * survives iff it is the first occurrence WITHIN the batch
-    * ((doc_id, span_idx) lexicographic — same rule as the batch
-    * operator) and its fingerprint is absent from the persisted span
-    * index; surviving spans reassemble into cleaned documents (a doc
-    * whose every span was already ingested drops entirely), and the
-    * surviving fingerprints append to the index. Both writes land in
-    * `batch=<id>` partitions with overwrite, and the index read
-    * excludes the current batch's partition — a replayed trigger
-    * overwrites its own attempt instead of double-ingesting (the
-    * [[ingestBatch]] exactly-once pattern at span granularity).
-    *
-    * Scale: the index is ONE narrow md5 column; the anti-join is an
-    * equi-join on it (bucket the index by hash + a Bloom front at
-    * cluster scale — [[graft.operators.Curation.decontaminateBloom]]
-    * shows that plan shape); span explode and reassembly are the batch
-    * operator's map-side/hash-agg stages unchanged. */
   /** Span-dedup front shared by [[ingestSpanBatch]] and
     * [[refreshCuratedBatch]]: in-batch first-occurrence + anti-join vs
     * the persisted span index (own batch excluded for replay), then
@@ -328,6 +309,25 @@ object StreamingPipeline {
     (kept, cleaned)
   }
 
+  /** One trigger of [[ingestSpanDedupSink]] — SPAN-level streaming
+    * dedup, the streaming twin of [[graft.operators.Dedup.spanDedup]]:
+    * incoming documents are cut into fixed-width token spans; a span
+    * survives iff it is the first occurrence WITHIN the batch
+    * ((doc_id, span_idx) lexicographic — same rule as the batch
+    * operator) and its fingerprint is absent from the persisted span
+    * index; surviving spans reassemble into cleaned documents (a doc
+    * whose every span was already ingested drops entirely), and the
+    * surviving fingerprints append to the index. Both writes land in
+    * `batch=<id>` partitions with overwrite, and the index read
+    * excludes the current batch's partition — a replayed trigger
+    * overwrites its own attempt instead of double-ingesting (the
+    * [[ingestBatch]] exactly-once pattern at span granularity).
+    *
+    * Scale: the index is ONE narrow md5 column; the anti-join is an
+    * equi-join on it (bucket the index by hash + a Bloom front at
+    * cluster scale — [[graft.operators.Curation.decontaminateBloom]]
+    * shows that plan shape); span explode and reassembly are the batch
+    * operator's map-side/hash-agg stages unchanged. */
   def ingestSpanBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       indexPath: String): Unit = {
     val (kept, cleaned) = spanDedupFront(batch, batchId, indexPath)

@@ -21,7 +21,7 @@ class CellSizingSpec extends SparkSpec {
     // tiny fixtures (unit tests) floor at kmK
     assert(Similarity.sizedCells(1L) === Similarity.kmK)
     assert(Similarity.sizedCells(0L) === Similarity.kmK)
-    // MakeScale sf1 = 20k vectors → 40 cells; the measured ScaleProbe
+    // MakeScale sf1 = 20k vectors → 40 cells; the round-8 scaling
     // grid (2k→32k at cells 4→64) sits exactly on the rule's 500/cell
     assert(Similarity.sizedCells(20000L) === 40)
     assert(Similarity.sizedCells(32000L) === 64)

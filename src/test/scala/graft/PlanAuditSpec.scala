@@ -19,6 +19,14 @@ class PlanAuditSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** Every registered query's executed plan, by name, planned once for
+    * the three roster audits: planning runs each eager pin's prefix, so
+    * the roster takes minutes to plan. */
+  private lazy val plans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> fn(spark, dir).queryExecution.executedPlan
+    }
+
   /** Queries whose INNER nested-loop join is the documented bounded-
     * broadcast probe, not an accident. */
   private val boundedProbeWhitelist = Set(
@@ -176,11 +184,9 @@ class PlanAuditSpec extends SparkSpec {
       here ++ (kids ++ p.subqueries).flatMap(offendingWindows)
     }
 
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val hits = offendingWindows(
-          fn(spark, dir).queryExecution.executedPlan)
-        if (hits.isEmpty) Nil else Seq(s"$name: ${hits.mkString("; ")}")
+    val offenders = plans.flatMap { case (name, plan) =>
+      val hits = offendingWindows(plan)
+      if (hits.isEmpty) Nil else Seq(s"$name: ${hits.mkString("; ")}")
     }
     assert(offenders.isEmpty,
       "unpartitioned Window over an unbounded input (rewrite with the " +
@@ -336,11 +342,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("no registered query plans an event-grain Window partitioned " +
       "only by low-cardinality dimensions (the tickSides class)") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val hits = eventGrainLowCardWindows(
-          fn(spark, dir).queryExecution.executedPlan)
-        if (hits.isEmpty) Nil else Seq(s"$name: ${hits.mkString("; ")}")
+    val offenders = plans.flatMap { case (name, plan) =>
+      val hits = eventGrainLowCardWindows(plan)
+      if (hits.isEmpty) Nil else Seq(s"$name: ${hits.mkString("; ")}")
     }
     assert(offenders.isEmpty,
       "per-dimension window over an event-grain input — one task sorts " +
@@ -350,14 +354,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("no registered query plans a cartesian or unbounded nested-loop join") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
-        val cartesian = plan.contains("CartesianProduct")
-        val nonCrossBnlj = bnljNonCross.findFirstIn(plan).isDefined &&
-          !boundedProbeWhitelist(name)
-        (if (cartesian) Seq(s"$name: CartesianProduct") else Nil) ++
-          (if (nonCrossBnlj) Seq(s"$name: unbounded non-equi BNLJ") else Nil)
+    val offenders = plans.flatMap { case (name, executed) =>
+      val plan = executed.toString
+      val cartesian = plan.contains("CartesianProduct")
+      val nonCrossBnlj = bnljNonCross.findFirstIn(plan).isDefined &&
+        !boundedProbeWhitelist(name)
+      (if (cartesian) Seq(s"$name: CartesianProduct") else Nil) ++
+        (if (nonCrossBnlj) Seq(s"$name: unbounded non-equi BNLJ") else Nil)
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
