@@ -21,6 +21,12 @@ import graft.Materialize.PinOps
   * pin runs no job, so no observation would ever fire, and the
   * signature is computed with a plain aggregate instead.
   *
+  * Callers: the k-core peel (`Similarity.kcoreEdges`, two layers per
+  * round), the k-truss peel (`Similarity.ktrussPeel`), the BFS census
+  * (`Similarity.bfsCensus`, four layers per round), big-star connected
+  * components (`Dedup.clustersBigStar`) and label propagation
+  * (`Dedup.clusters`).
+  *
   * Small inputs skip the distributed rounds altogether: when the first
   * observed row count is at most [[Local.maxRows]], the caller's local
   * step finishes the fixpoint in one task (the CC analog of a broadcast
@@ -29,8 +35,9 @@ import graft.Materialize.PinOps
   * Contract for callers:
   *   - `step` must reach a fixpoint, and the signature of two
   *     consecutive states must be equal exactly when the state stopped
-  *     changing. For monotone loops (a set that only shrinks, labels
-  *     that only decrease) [[rows]] or [[checksum]] gives that.
+  *     changing. For monotone loops (a set that only shrinks or only
+  *     grows, labels that only decrease) [[rows]] or [[checksum]] gives
+  *     that.
   *   - `layers > 1` applies `step` that many times per pinned round. It
   *     is exact only for monotone steps, where an unchanged signature
   *     across several layers forces every layer in between to be
@@ -45,7 +52,8 @@ object Fixpoint {
     * first aggregate is always the row count. */
   final case class Measure(aggs: Seq[Column])
 
-  /** Row count: the signature of a set that only ever shrinks. */
+  /** Row count: the signature of a set that only ever shrinks, or
+    * only ever grows. */
   val rows: Measure = Measure(Seq(count(lit(1))))
 
   /** Row count plus an order-insensitive `bit_xor` of per-row hashes:

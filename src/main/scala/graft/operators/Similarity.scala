@@ -2321,14 +2321,14 @@ object Similarity {
         .join(keep.select(col("vec_id").as("vec_b")), Seq("vec_b"), "left_semi")
         .select(col("vec_a"), col("vec_b"))
     }
-    // TWO peel layers per pinned SQL execution (the bfsRadius
-    // double-step argument, round 12): per-round cost is dominated by
-    // the fixed price of an execution, so halving the execution count
-    // halves the serial chain. Exact because peeling only removes
-    // edges (the Fixpoint `layers` contract); a cascade that converges
-    // at an odd layer just makes the second layer a no-op. Not more
-    // than two: each layer reads its input three times, so the plan of
-    // one execution grows ~3^layers (four layers measured slower).
+    // TWO peel layers per pinned SQL execution (measured round 12):
+    // per-round cost is dominated by the fixed price of an execution,
+    // so halving the execution count halves the serial chain. Exact
+    // because peeling only removes edges (the Fixpoint `layers`
+    // contract); a cascade that converges at an odd layer just makes
+    // the second layer a no-op. Not more than two: each layer reads
+    // its input three times, so the plan of one execution grows
+    // ~3^layers (four layers measured slower).
     Fixpoint("kcore peel", s0, kcoreMaxRounds, layers = 2,
       local = Some(Fixpoint.Local(localMaxEdges, kcoreLocal(_, coreK))))(
       peelOnce)
@@ -2437,8 +2437,9 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
-  /** Safety cap on [[bfsRadius]] frontier rounds — BFS depth is the
-    * component diameter (data-dependent); exceed = fail LOUD. */
+  /** Safety cap on [[bfsRadius]] BFS layers — BFS depth is the
+    * component diameter (data-dependent); exceed = fail LOUD through
+    * [[graft.Fixpoint]]'s max-rounds check. */
   val bfsMaxRounds = 256
 
   /** Unroll depth the DuckDB oracle states for [[bfsRadius]], with
@@ -2456,114 +2457,62 @@ object Similarity {
     * distance — the "how stringy are my near-dup blobs" diagnostic
     * that separates chain-shaped semantic drift from tight balls.
     *
-    * Scale: one CC pass (the audited big-star loop), then one
-    * frontier join per BFS layer — each a frontier×adjacency equi-
-    * join anti-joined against visited, all k-bounded; layer count is
-    * the component diameter, convergence is frontier EXHAUSTION
-    * (count 0), rounds capped loud at [[bfsMaxRounds]]. All-integer
-    * output except the exact-int mean division. */
+    * Scale: one CC pass (the audited big-star loop), then the
+    * [[bfsCensus]] relaxation — one join of the frontier against the
+    * k-bounded adjacency per BFS layer. All-integer output except the
+    * exact-int mean division. */
   def bfsRadius(embeddings: DataFrame, k: Int = 3,
-      cells: Int = autoCells): DataFrame = {
-    val e0 = mutualKnnEdges(embeddings, k, cells)
-      .select(col("vec_a"), col("vec_b")).pin(eager = true)
+      cells: Int = autoCells): DataFrame =
+    bfsCensus(mutualKnnEdges(embeddings, k, cells))
+
+  /** The BFS census over ANY deduplicated (vec_a, vec_b) edge frame —
+    * split from [[bfsRadius]] so hand-built graphs (deep paths, cycles)
+    * can be fed directly, like [[kcorePeel]].
+    *
+    * The state is the whole distance table (seed, node, dist, front),
+    * started from the seeds at distance 0. One layer is the oracle's
+    * min-relaxation restricted to the frontier: each row is left-joined
+    * to its neighbours when it is on the frontier, keeps its own
+    * distance, and offers `dist + 1` to each neighbour; per (seed,
+    * node) the minimum wins — the old distance where there is one,
+    * since a seed's frontier is its farthest layer — and a node is on
+    * the next frontier iff it had no old distance. The table only
+    * grows, so a stable row count is a stable table, and
+    * [[graft.Fixpoint]] runs the layers under [[Fixpoint.rows]], capped
+    * at [[bfsMaxRounds]] layers.
+    *
+    * Four layers per pinned round: each layer reads its input once, so
+    * the round's plan grows linearly in the layer count (measured at
+    * sf0.1 on 4 cores: 1/2/4/8 layers ran 11.0/9.8/9.3/10.0 s). A
+    * census that converges mid-round makes the remaining layers
+    * no-ops. */
+  def bfsCensus(edges0: DataFrame): DataFrame = {
+    val e0 = edges0.select(col("vec_a"), col("vec_b")).pin(eager = true)
     val und = e0.select(col("vec_a").as("u"), col("vec_b").as("c"))
       .unionAll(e0.select(col("vec_b").as("u"), col("vec_a").as("c")))
       .pin(eager = true)
     val seeds = Dedup.clustersBigStar(
         e0.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("cluster_id").as("seed")).distinct()
-    val d0 = seeds
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
-      .pin(eager = true)
-    // layers accumulate as a lazy union of PINNED frontiers for the
-    // final census. The per-round dedup anti-join does NOT need the
-    // full visited set (round-10 verdict task 4 — re-deriving that
-    // union made each round's scan O(depth-so-far × reached)): in an
-    // unweighted BFS a neighbor of a distance-d frontier node sits at
-    // distance d−1, d, or d+1 — NEVER deeper (triangle inequality on
-    // hop counts) — so anti-joining against the last TWO layers alone
-    // is exact, and total anti-join scan work is O(reached) across
-    // the whole census instead of O(depth × reached).
-    // MULTI-STEPPED loop (round-12 double step, widened round 13):
-    // each pinned SQL execution computes a CHAIN of BFS layers,
-    // because the dominant per-round cost at every measured scale is
-    // the fixed price of one SQL execution + checkpoint (planning,
-    // AQE stage scheduling, block writes), not the per-row work.
-    // Layer semantics are UNCHANGED: layer i rows carry dist d+i, the
-    // anti-join set of each layer is the union of the two layers
-    // immediately below it — exactly the layers that can contain an
-    // already-reached neighbor (the triangle-inequality argument
-    // above, applied once per hop) — and each layer's subtree is
-    // shared inside the one plan (AQE stage reuse) instead of being
-    // its own pinned round. One eager pin + one per-layer-count
-    // aggregate per CHAIN, so the execution count divides by the
-    // chain length at any depth.
-    var layers = List(d0)
-    var frontier = d0
-    var lastTwo = d0.select(col("seed"), col("node"))
-    var nf = frontier.count()
-    var rounds = 0
-    def expand(f: DataFrame): DataFrame =
-      f.join(und, col("node") === col("u"))
-        .select(col("seed"), col("c").as("nnode"),
-          (col("dist") + lit(1L)).as("ndist"))
-        .groupBy(col("seed"), col("nnode"))
-        .agg(min(col("ndist")).as("ndist"))
-        .select(col("seed"), col("nnode").as("node"),
-          col("ndist").as("dist"))
-    // layers per pinned execution: the chain l1..lN generalizes the
-    // double step — each layer anti-joins the union of the TWO layers
-    // immediately below it (the same triangle-inequality set, applied
-    // once per hop), so exactness is hop-local and N is a pure
-    // fixed-cost knob. N is NOT free to raise: each layer's plan
-    // references the previous layer TWICE (expand input + anti set),
-    // so the unpinned tree grows ~2^N — N=8 was measured to stall in
-    // Catalyst (planning explosion), N=4 plans in normal time. A layer coming up empty means the census is
-    // exhausted (its nodes have no unvisited neighbors), so every
-    // later layer in the round is empty too and the per-layer counts
-    // from ONE aggregate over the pinned tagged union decide both
-    // convergence and the next round's frontier slices.
-    val layersPerRound = 4
-    while (nf > 0) {
-      rounds += layersPerRound
-      if (rounds > bfsMaxRounds) throw new IllegalStateException(
-        s"bfsRadius did not exhaust frontiers within $bfsMaxRounds " +
-          s"rounds ($nf nodes still expanding) — raise bfsMaxRounds")
-      var antiSet = lastTwo
-      var cur = frontier
-      val built = (1 to layersPerRound).map { _ =>
-        val li = expand(cur).join(antiSet, Seq("seed", "node"), "left_anti")
-        antiSet = cur.select(col("seed"), col("node"))
-          .unionByName(li.select(col("seed"), col("node")))
-        cur = li
-        li
-      }
-      val tagged = built.zipWithIndex
-        .map { case (l, i) => l.withColumn("layer", lit(i + 1)) }
-        .reduce(_ unionByName _)
-        .pin(eager = true)
-      val nByLayer = {
-        val m = tagged.groupBy(col("layer"))
-          .agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        (1 to layersPerRound).map(i => m.getOrElse(i, 0L))
-      }
-      (1 to layersPerRound).foreach { i =>
-        if (nByLayer(i - 1) > 0)
-          layers ::= tagged.filter(col("layer") === i).drop("layer")
-      }
-      nf = nByLayer.last
-      if (nf > 0) {
-        // the round's top two layers ARE the two preceding the new
-        // frontier — slices of the one pinned frame, no extra
-        // materialization
-        lastTwo = tagged.filter(col("layer") >= layersPerRound - 1)
-          .select(col("seed"), col("node"))
-        frontier = tagged.filter(col("layer") === layersPerRound)
-          .drop("layer")
-      }
+    val s0 = Fixpoint.start(seeds.select(col("seed"), col("seed").as("node"),
+      lit(0L).as("dist"), lit(true).as("front")))
+    def layer(s: DataFrame): DataFrame = {
+      def offer(node: Column, dist: Column, old: Boolean) =
+        struct(node.cast("long").as("node"), dist.as("dist"),
+          lit(old).as("old"))
+      val own = offer(col("node"), col("dist"), old = true)
+      val next = offer(col("c"), col("dist") + 1L, old = false)
+      s.join(und, col("front") && col("node") === col("u"), "left")
+        .select(col("seed"), explode(
+          when(col("c").isNull, array(own)).otherwise(array(own, next)))
+          .as("o"))
+        .groupBy(col("seed"), col("o.node").as("node"))
+        .agg(min(col("o.dist")).as("dist"), max(col("o.old")).as("old"))
+        .select(col("seed"), col("node"), col("dist"),
+          (!col("old")).as("front"))
     }
-    layers.reduce(_ unionByName _).groupBy(col("seed")).agg(
+    Fixpoint("bfsRadius", s0, bfsMaxRounds, layers = 4)(layer)
+      .groupBy(col("seed")).agg(
         count(lit(1)).as("n_reached"),
         max(col("dist")).as("eccentricity"),
         round(sum(col("dist")).cast("double") /
@@ -2638,13 +2587,14 @@ object Similarity {
     val sup0 = support(e0)
       .select(col("vec_a"), col("vec_b"), col("support").as("sup0"))
       .pin(eager = true)
-    // NOT double-stepped, unlike kcoreEdges/bfsRadius: measured in
-    // round 13 (3 alternating A/B pairs), two truss layers per pinned
-    // execution read jobs 43→47, tasks 47→53, task-s 2.2→3.2 — the
-    // unpinned mid layer is consumed on DIFFERENT keys (wedge join on
-    // each endpoint vs the semi-join pair key), so nothing below it is
-    // reused and the whole wedge front recomputes per consumer — the
-    // same shape that made the round-12 und-pin drop regress.
+    // One layer per round, unlike kcoreEdges (2) and bfsCensus (4):
+    // measured in round 13 (3 alternating A/B pairs), two truss layers
+    // per pinned execution read jobs 43→47, tasks 47→53, task-s
+    // 2.2→3.2 — the unpinned mid layer is consumed on DIFFERENT keys
+    // (wedge join on each endpoint vs the semi-join pair key), so
+    // nothing below it is reused and the whole wedge front recomputes
+    // per consumer — the same shape that made the round-12 und-pin
+    // drop regress.
     val edges = Fixpoint("ktruss peel", s0, ktrussMaxRounds) { e =>
       val qual = support(e)
         .filter(col("support") >= ktrussK - 2)
