@@ -2487,12 +2487,14 @@ object Similarity {
     * census that converges mid-round makes the remaining layers
     * no-ops. */
   def bfsCensus(edges0: DataFrame): DataFrame = {
-    val e0 = edges0.select(col("vec_a"), col("vec_b")).pin(eager = true)
-    val und = e0.select(col("vec_a").as("u"), col("vec_b").as("c"))
-      .unionAll(e0.select(col("vec_b").as("u"), col("vec_a").as("c")))
+    // both directions from one read; the CC folds them back into one
+    val und = edges0.select(explode(array(
+        struct(col("vec_a").as("u"), col("vec_b").as("c")),
+        struct(col("vec_b").as("u"), col("vec_a").as("c")))).as("e"))
+      .select(col("e.u"), col("e.c"))
       .pin(eager = true)
     val seeds = Dedup.clustersBigStar(
-        e0.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+        und.select(col("u").as("doc_a"), col("c").as("doc_b")))
       .select(col("cluster_id").as("seed")).distinct()
     val s0 = Fixpoint.start(seeds.select(col("seed"), col("seed").as("node"),
       lit(0L).as("dist"), lit(true).as("front")))

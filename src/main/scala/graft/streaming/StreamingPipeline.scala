@@ -5,6 +5,7 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.operators.{StockPipeline, TextAnalysis}
@@ -31,6 +32,15 @@ import graft.Materialize.PinOps
   * and rebuilds the SMA/spike analysis table from that store inside
   * `foreachBatch` in one window pass (SURVEY.md §7.4) — see its doc
   * for the exactly-once argument.
+  *
+  * The four exactly-once sinks ([[ingestDedupSink]],
+  * [[ingestSpanDedupSink]], [[curatedRefreshSink]], [[analysisSink]])
+  * keep their state in one format, a directory of `batch=<id>` parquet
+  * partitions, one per trigger, known only to four private defs:
+  * [[writeBatch]] overwrites the trigger's own partition, [[readStore]]
+  * reads the committed files with the caller's schema and runs no job,
+  * [[unseen]] anti-joins against a store minus the trigger's own
+  * partition, and [[batchSink]] is the one `foreachBatch` wrapper.
   *
   * Scale notes: state for the windowed aggs lives in the HDFS-backed
   * state store partitioned by (ticker, window) — the same hash layout as
@@ -196,32 +206,16 @@ object StreamingPipeline {
   def dedupStream(events: DataFrame, delay: String = "2 minutes"): DataFrame =
     events.withWatermark("ts", delay).dropDuplicatesWithinWatermark("event_id")
 
-  /** True iff the index directory exists AND holds at least one
-    * COMMITTED data file. A plain `fs.exists` is not enough: a
-    * first-trigger crash mid-write can leave only `_temporary`
-    * droppings under `batch=0`, and treating that as a readable index
-    * turns every retry into the same "unable to infer schema" failure —
-    * a permanent crash loop. Exists-but-no-committed-data must read as
-    * "no index yet" (the retry then overwrites its own partition);
-    * every other failure mode still propagates and fails the trigger. */
-  private def indexHasCommittedData(s: SparkSession, path: String): Boolean = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(dir) && Option(
-      fs.globStatus(new org.apache.hadoop.fs.Path(path, "*/part-*")))
-      .exists(_.nonEmpty)
-  }
-
   /** One trigger of [[ingestDedupSink]]: dedup `batch` within itself
     * (min doc_id per fingerprint wins) and against the persisted
     * fingerprint index, then append the survivors to the corpus store
     * and their fingerprints to the index — both into a `batch=<id>`
     * partition written with overwrite, so a REPLAYED trigger after a
     * failure overwrites its own partitions instead of double-ingesting
-    * (the index read excludes the current batch's partition for the
-    * same reason: a replay must not anti-join against its own earlier
-    * attempt). Factored out of the sink so the exactly-once argument is
-    * directly testable, replay included.
+    * (the index anti-join, [[unseen]], skips the current batch's
+    * partition for the same reason: a replay must not anti-join against
+    * its own earlier attempt). Factored out of the sink so the
+    * exactly-once argument is directly testable, replay included.
     *
     * Scale: the index is (fingerprint, doc_id) only — two narrow
     * columns, never the text — and the anti-join is an equi-join on the
@@ -231,33 +225,16 @@ object StreamingPipeline {
     * that shape. */
   def ingestBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       indexPath: String): Unit = {
-    val s = batch.sparkSession
     val fp = batch.withColumn("fingerprint",
       md5(TextAnalysis.normalizedText(col("text"))))
     val firstInBatch = fp.groupBy(col("fingerprint"))
       .agg(min(col("doc_id")).as("keep_id"))
     val batchUnique = fp.join(firstInBatch, Seq("fingerprint"))
       .filter(col("doc_id") === col("keep_id")).drop("keep_id")
-    // Readability is checked explicitly: only a genuinely absent index
-    // (first batch) skips the dedup join. Any OTHER read failure —
-    // schema drift, corrupt metadata, permissions — propagates and
-    // fails the trigger for retry; swallowing it as "no index yet"
-    // would silently double-ingest and break the exactly-once contract.
-    val fresh =
-      if (indexHasCommittedData(s, indexPath)) {
-        val index = s.read.parquet(indexPath)
-          .filter(col("batch") =!= batchId) // replay: ignore own attempt
-        batchUnique.join(index, Seq("fingerprint"), "left_anti")
-      } else batchUnique
-    // EAGER pin: `fresh` reads the index path this trigger also
-    // writes — the cut must complete before the first sink write, not
-    // ride the first action, or correctness would silently depend on
-    // the corpus write always preceding the index write
-    val kept = fresh.pin(eager = true)
-    kept.drop("fingerprint")
-      .write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-    kept.select(col("fingerprint"), col("doc_id"))
-      .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+    val kept = unseen(batchUnique, "fingerprint", indexPath, batchId)
+    writeBatch(kept.drop("fingerprint"), corpusPath, batchId)
+    writeBatch(kept.select(col("fingerprint"), col("doc_id")), indexPath,
+      batchId)
   }
 
   /** Streaming corpus ingest with exactly-once exact dedup against a
@@ -265,17 +242,11 @@ object StreamingPipeline {
     * a growing training corpus (the streaming twin of
     * [[graft.operators.Dedup.incremental]]'s exact tier; its LSH
     * near-dup tier runs as the batch compaction pass over the stored
-    * corpus). Each trigger runs [[ingestBatch]]. */
+    * corpus). Each non-empty trigger runs [[ingestBatch]] through
+    * [[batchSink]]. */
   def ingestDedupSink(documents: DataFrame, corpusPath: String,
-      indexPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    documents.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) ingestBatch(batch, batchId, corpusPath, indexPath)
-        ()
-      }
-      .start()
+      indexPath: String, checkpoint: String): StreamingQuery =
+    batchSink(documents, checkpoint)(ingestBatch(_, _, corpusPath, indexPath))
 
   /** Span-dedup front shared by [[ingestSpanBatch]] and
     * [[refreshCuratedBatch]]: in-batch first-occurrence + anti-join vs
@@ -285,22 +256,12 @@ object StreamingPipeline {
     * reassembled cleaned documents). */
   private def spanDedupFront(batch: DataFrame, batchId: Long,
       indexPath: String): (DataFrame, DataFrame) = {
-    val s = batch.sparkSession
     // first-occurrence rule and reassembly are the batch operator's own
     // helpers — the twins share one definition by construction
     val inBatchKept = graft.operators.Dedup.withSpanFirstFlag(
         graft.operators.Dedup.spanRows(batch))
       .filter(col("is_first")).drop("is_first")
-    val fresh =
-      if (indexHasCommittedData(s, indexPath)) {
-        val index = s.read.parquet(indexPath)
-          .filter(col("batch") =!= batchId) // replay: ignore own attempt
-        inBatchKept.join(index.select(col("hh")), Seq("hh"), "left_anti")
-      } else inBatchKept
-    // EAGER pin: `fresh` reads the index path this trigger also
-    // writes — materialization must complete before EITHER write
-    // starts, so the two writes' order can never matter
-    val kept = fresh.pin(eager = true)
+    val kept = unseen(inBatchKept, "hh", indexPath, batchId)
     val cleaned = kept.groupBy(col("doc_id"))
       .agg(graft.operators.Dedup.orderedSpanConcat(
         "struct(span_idx, span_text)").as("text"))
@@ -331,23 +292,16 @@ object StreamingPipeline {
   def ingestSpanBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       indexPath: String): Unit = {
     val (kept, cleaned) = spanDedupFront(batch, batchId, indexPath)
-    cleaned.write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-    kept.select(col("hh"))
-      .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+    writeBatch(cleaned, corpusPath, batchId)
+    writeBatch(kept.select(col("hh")), indexPath, batchId)
   }
 
-  /** Streaming span-dedup corpus ingest (exactly-once): each trigger
-    * runs [[ingestSpanBatch]]. */
+  /** Streaming span-dedup corpus ingest (exactly-once): each non-empty
+    * trigger runs [[ingestSpanBatch]] through [[batchSink]]. */
   def ingestSpanDedupSink(documents: DataFrame, corpusPath: String,
-      indexPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    documents.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) ingestSpanBatch(batch, batchId, corpusPath, indexPath)
-        ()
-      }
-      .start()
+      indexPath: String, checkpoint: String): StreamingQuery =
+    batchSink(documents, checkpoint)(
+      ingestSpanBatch(_, _, corpusPath, indexPath))
 
   /** One trigger of [[curatedRefreshSink]] — the full streaming
     * curated-corpus refresh (the round-3 span-ingest pattern one level
@@ -377,30 +331,24 @@ object StreamingPipeline {
       .join(graft.operators.Curation.qualityFilter(cleaned)
         .select(col("doc_id"), col("keep")), Seq("doc_id"))
       .filter(col("keep")).drop("keep")
-    curated.write.mode("overwrite").parquet(s"$curatedPath/batch=$batchId")
-    kept.select(col("hh"))
-      .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
-    val corpus = s.read.parquet(curatedPath).drop("batch")
+    writeBatch(curated, curatedPath, batchId)
+    writeBatch(kept.select(col("hh")), indexPath, batchId)
+    val corpus = readStore(s, curatedPath, curated.schema).drop("batch")
     graft.operators.Curation.corpusReport(corpus)
       .write.mode("overwrite").parquet(reportPath)
     graft.operators.Curation.corpusChecksum(corpus)
       .write.mode("overwrite").parquet(s"${reportPath}_checksum")
   }
 
-  /** Streaming curated-corpus refresh: each trigger runs
-    * [[refreshCuratedBatch]] — ingest-dedup-curate-report as ONE
-    * exactly-once foreachBatch pipeline. */
+  /** Streaming curated-corpus refresh: each non-empty trigger runs
+    * [[refreshCuratedBatch]] through [[batchSink]] —
+    * ingest-dedup-curate-report as ONE exactly-once foreachBatch
+    * pipeline. */
   def curatedRefreshSink(documents: DataFrame, curatedPath: String,
       indexPath: String, reportPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    documents.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          refreshCuratedBatch(batch, batchId, curatedPath, indexPath, reportPath)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    batchSink(documents, checkpoint)(
+      refreshCuratedBatch(_, _, curatedPath, indexPath, reportPath))
 
   /** The quality gate with named observed metrics attached — the
     * production monitoring surface: `observe` plants a CollectMetrics
@@ -419,15 +367,26 @@ object StreamingPipeline {
         // 0, not NPE the monitoring consumer
         coalesce(sum(col("keep").cast("long")), lit(0L)).as("n_kept"))
 
-  /** A `batch=<id>`-partitioned parquet store of `schema` (its last
-    * field is the partition column), listed on the driver with one
-    * glob of the committed part files. `spark.read` would infer the
+  /** Land one trigger's rows in their own partition of `store`, by
+    * overwrite: a trigger replayed after a failure replaces its own
+    * earlier attempt, `_temporary` droppings included, instead of
+    * appending a second copy. */
+  private def writeBatch(rows: DataFrame, store: String,
+      batchId: Long): Unit =
+    rows.write.mode("overwrite").parquet(s"$store/batch=$batchId")
+
+  /** Every committed row of `store`: the columns of `schema`, nullable
+    * as in any file read, plus the `batch` id. The part files are
+    * listed on the driver with one glob. `spark.read` would infer the
     * schema with a job, and past `parallelPartitionDiscovery.threshold`
     * (32) partition directories it lists them with a job too; a store
     * that gains one directory per trigger crosses that after 32
-    * triggers. The glob skips `_temporary` droppings as the
-    * reader's hidden-path rule does; the listing goes to the file index
-    * as a one-entry cache, so nothing outlives the read. */
+    * triggers. The glob skips `_temporary` droppings as the reader's
+    * hidden-path rule does, so an absent store, or one that a crashed
+    * first trigger left holding only droppings, reads as an empty frame
+    * (the partition schema is passed in: inferred from no files, it
+    * would have no `batch`). The listing goes to the file index as a
+    * one-entry cache, so nothing outlives the read. */
   private def readStore(s: SparkSession, store: String,
       schema: StructType): DataFrame = {
     import org.apache.hadoop.fs.{FileStatus, Path}
@@ -445,11 +404,40 @@ object StreamingPipeline {
       def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
       def invalidateAll(): Unit = ()
     }
+    val data = StructType(schema.map(_.copy(nullable = true)))
+    val part = new StructType().add("batch", LongType)
     val index = new InMemoryFileIndex(s, Seq(qualified), Map.empty,
-      Some(schema), listed)
-    s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      StructType(schema.init), None, new ParquetFileFormat, Map.empty)(s))
+      Some(StructType(data ++ part)), listed)
+    s.baseRelationToDataFrame(HadoopFsRelation(index, part, data, None,
+      new ParquetFileFormat, Map.empty)(s))
   }
+
+  /** The rows of `rows` whose `key` is in no earlier trigger's
+    * partition of `store`, pinned. The trigger's own partition is
+    * skipped, so a replay does not anti-join against its own earlier
+    * attempt. The pin is EAGER: the result reads the store this
+    * trigger then writes, so the cut must complete before the first
+    * write starts, and the order of the trigger's writes can never
+    * matter. */
+  private def unseen(rows: DataFrame, key: String, store: String,
+      batchId: Long): DataFrame = {
+    val seen = readStore(rows.sparkSession, store,
+        new StructType().add(rows.schema(key)))
+      .filter(col("batch") =!= batchId)
+    rows.join(seen.select(col(key)), Seq(key), "left_anti").pin(eager = true)
+  }
+
+  /** The one `foreachBatch` sink of the four: started with its
+    * checkpoint, in the default append output mode, running `trigger`
+    * (the micro-batch, its id) on every non-empty micro-batch. */
+  private[graft] def batchSink(rows: DataFrame, checkpoint: String)(
+      trigger: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) trigger(batch, batchId)
+      }
+      .start()
 
   /** One trigger of [[analysisSink]]: land the trigger's finalized
     * minute rows in their own `batch=<id>` partition (overwrite — a
@@ -479,10 +467,10 @@ object StreamingPipeline {
   def analysisBatch(batch: DataFrame, batchId: Long, minuteStore: String,
       outPath: String): Unit = {
     val closed = Observation()
-    batch.observe(closed, max(col("window_timestamp")))
-      .write.mode("overwrite").parquet(s"$minuteStore/batch=$batchId")
-    val allMinutes = readStore(batch.sparkSession, minuteStore,
-      batch.schema.add("batch", LongType)).drop("batch")
+    writeBatch(batch.observe(closed, max(col("window_timestamp"))),
+      minuteStore, batchId)
+    val allMinutes = readStore(batch.sparkSession, minuteStore, batch.schema)
+      .drop("batch")
     val now = Option(Await.result(closed.future, 30.seconds).get(0))
       .getOrElse(allMinutes.agg(max(col("window_timestamp"))).head().get(0))
     StockPipeline.analysisFromMinutes(allMinutes, lit(now))
@@ -509,20 +497,14 @@ object StreamingPipeline {
     * The rebuild reads the minute-grade store (~|events| /
     * events-per-minute, a ~100-1000× reduction). It must rewrite every
     * row each trigger anyway: `system_latency` is relative to the
-    * store's max window end, which every closing trigger moves. Returns
-    * the started query (caller awaits/stops). */
+    * store's max window end, which every closing trigger moves. Each
+    * non-empty trigger runs [[analysisBatch]] through [[batchSink]].
+    * Returns the started query (caller awaits/stops). */
   def analysisSink(spark: SparkSession, inputDir: String, outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     val minuteStore = outPath + "_minutes"
     val minutes = StockPipeline.minuteAggs(
       withEventTime(eventsStream(spark, inputDir)))
-    minutes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) analysisBatch(batch, batchId, minuteStore, outPath)
-        ()
-      }
-      .start()
+    batchSink(minutes, checkpoint)(analysisBatch(_, _, minuteStore, outPath))
   }
 }

@@ -38,7 +38,7 @@ object TickState {
   private[streaming] def fold(key: String, start: Option[TickCarry],
       rows: Iterator[TickEventRow]): (Option[TickCarry], Iterator[TickSideRow]) = {
     var c = start
-    val out = rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id)).map { r =>
+    val out = rows.toSeq.sortBy(r => (usOf(r.ts), r.event_id)).map { r =>
       val tick: Option[Int] = c.flatMap { p =>
         if (r.price > p.prevPrice) Some(1)
         else if (r.price < p.prevPrice) Some(-1)

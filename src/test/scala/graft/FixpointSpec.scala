@@ -135,12 +135,11 @@ class FixpointSpec extends SparkSpec {
       val (jobs, execs) = counted("bfs") {
         assert(census(pathTriangle) === driverBfs(pathTriangle))
       }
-      // edge pin, adjacency pin, CC start pin and its single-task
-      // finish, census start pin, 6 four-layer rounds (five to reach
-      // depth 19, one to see the table stable), result collect; a
-      // per-round collect or a second pin per round would add
-      // executions
-      assert(execs.size === 12, execs)
+      // adjacency pin, CC start pin and its single-task finish, census
+      // start pin, 6 four-layer rounds (five to reach depth 19, one to
+      // see the table stable), result collect; a per-round collect or a
+      // second pin per round would add executions
+      assert(execs.size === 11, execs)
       assert(!execs.init.exists(d => d.startsWith("count at") ||
         d.startsWith("collect at") || d.startsWith("head at")), execs)
       assert(execs.last.startsWith("collect at"), execs)

@@ -388,19 +388,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  /** The store and table of one [[StreamingPipeline.analysisBatch]]
-    * sink fed by `minutes`, each non-empty trigger running `sink` (the
-    * batch, its id) inside foreachBatch. */
-  private def minuteSink(minutes: DataFrame, tmp: String)(
-      sink: (DataFrame, Long) => Unit) =
-    minutes.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) sink(batch, id)
-        ()
-      }
-      .start()
-
   test("analysis sink: after every closing trigger the table equals the " +
       "batch statement over the minute store on all 11 columns, across " +
       "gaps, late-starting tickers and single-ticker triggers") {
@@ -413,8 +400,9 @@ class StreamingSpec extends SparkSpec {
       (Long, Set[String], Seq[Row], Seq[Row])]()
     def rows(df: DataFrame): Seq[Row] =
       df.orderBy("ticker", "window_timestamp").collect().toSeq
-    val q = minuteSink(StockPipeline.minuteAggs(
-        StreamingPipeline.withEventTime(stream.toDF())), tmp) { (batch, id) =>
+    val minutes = StockPipeline.minuteAggs(
+      StreamingPipeline.withEventTime(stream.toDF()))
+    val q = StreamingPipeline.batchSink(minutes, s"$tmp/ckpt") { (batch, id) =>
       StreamingPipeline.analysisBatch(batch, id, store, out)
       val s = batch.sparkSession
       val expect = StockPipeline.analysisFromJoined(
@@ -485,8 +473,9 @@ class StreamingSpec extends SparkSpec {
       // with AQE off, as the sink's do
       val stream = MemoryStream[RawEvent]
       val pins = new java.util.concurrent.atomic.AtomicInteger(-1)
-      val q = minuteSink(StockPipeline.minuteAggs(
-          StreamingPipeline.withEventTime(stream.toDF())), tmp) { (batch, id) =>
+      val minutes = StockPipeline.minuteAggs(
+        StreamingPipeline.withEventTime(stream.toDF()))
+      val q = StreamingPipeline.batchSink(minutes, s"$tmp/ckpt") { (batch, id) =>
         val sc = batch.sparkSession.sparkContext
         val before = sc.getPersistentRDDs.size
         inGroup("sink-cost") {
@@ -687,6 +676,72 @@ class StreamingSpec extends SparkSpec {
       assert(spark.read.parquet(index).count() === 3)
     } finally q.stop()
   }
+
+  test("ingest cost guard: over stores of 40 earlier triggers, an ingest " +
+      "trigger and a curated-refresh trigger each run a fixed job count, " +
+      "none of them a schema-inference or listing job") {
+    val base = java.nio.file.Files.createTempDirectory("graft-ingest-cost").toString
+    val (corpus, index, curated, spans, report) = (s"$base/corpus",
+      s"$base/index", s"$base/curated", s"$base/spans", s"$base/report")
+    val prior = 40
+    // two 8-token spans per document, both unique to it
+    def docs(ids: Seq[Long]) = ids.map(i =>
+        (i, s"the cat $i and the hat is a cat of the house $i and it is"))
+      .toDF("_1", "_2")
+      .select(col("_1").as("doc_id"), col("_2").as("text"),
+        lit("en").as("lang"), lit("src0").as("source"),
+        length(col("_2")).cast("long").as("n_chars"))
+    // the earlier triggers' partitions: trigger b ingested document b
+    val earlier = docs(0L until prior).withColumn("batch", col("doc_id"))
+    earlier.select(md5(graft.operators.TextAnalysis.normalizedText(
+        col("text"))).as("fingerprint"), col("doc_id"), col("batch"))
+      .write.partitionBy("batch").parquet(index)
+    earlier.write.partitionBy("batch").parquet(curated)
+    graft.operators.Dedup.spanRows(earlier)
+      .select(col("hh"), col("doc_id").as("batch"))
+      .write.partitionBy("batch").parquet(spans)
+    // document 0 repeats an indexed one, document `prior` is fresh
+    val batch = docs(Seq(0L, prior.toLong))
+    // schema inference and partition listing run while a read is
+    // planned, outside any SQL execution: every job of the two triggers
+    // must belong to one. `counted`'s drain job also drains this
+    // listener, which sits on the same bus queue
+    val planning = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = j.properties
+        if (Set("ingest-cost", "refresh-cost")(
+              p.getProperty("spark.jobGroup.id")) &&
+            p.getProperty("spark.sql.execution.id") == null)
+          planning.add(j.stageInfos.map(_.name).mkString(", "))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val ((ingestJobs, ingestExecs), (refreshJobs, refreshExecs)) =
+      try (counted("ingest-cost") {
+        StreamingPipeline.ingestBatch(batch, prior, corpus, index)
+      }, counted("refresh-cost") {
+        StreamingPipeline.refreshCuratedBatch(batch, prior, curated, spans,
+          report)
+      }) finally spark.sparkContext.removeSparkListener(listener)
+    assert(planning.isEmpty, planning)
+    assert((ingestJobs, refreshJobs) === ((IngestJobs, RefreshJobs)),
+      (ingestExecs, refreshExecs))
+    assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect()
+      .toSeq === Seq(prior.toLong))
+    assert(spark.read.parquet(s"$curated/batch=$prior").select("doc_id")
+      .as[Long].collect().toSeq === Seq(prior.toLong))
+    assert(spark.read.parquet(report).agg(sum("n_docs")).head().getLong(0) ===
+      prior + 1L)
+  }
+
+  // measured on the suite's session (local[2], 2 shuffle partitions).
+  // Reading each store with `spark.read` ran 8 and 23: a schema-inference
+  // and a listing job per store read, one read in the ingest trigger and
+  // two in the refresh
+  private val IngestJobs = 6
+  private val RefreshJobs = 19
 
   test("observed metrics: every trigger's progress carries the quality " +
       "gate's exact row/keep counts") {

@@ -509,7 +509,7 @@ class TimeSeriesSpec extends SparkSpec {
     assert(nB === 3L && covB === 0.0 && rollB === None)
   }
 
-  test("streaming OBV (transformWithState) is exactly identical to " +
+  test("streaming OBV (KeyedFold) is exactly identical to " +
       "the batch running-window kernel across split triggers " +
       "(all-integer flow)") {
     implicit val sqlCtx = spark.sqlContext
@@ -755,7 +755,7 @@ class TimeSeriesSpec extends SparkSpec {
       TimeSeries.MfiSpan.toLong)
   }
 
-  test("streaming Donchian (transformWithState) is bit-identical to " +
+  test("streaming Donchian (KeyedFold) is bit-identical to " +
       "the batch greatest/least lag-chain kernel across split triggers") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{DonchianState, OhlcRow}
@@ -924,42 +924,54 @@ class TimeSeriesSpec extends SparkSpec {
     assert(r.getDouble(6) === -0.6, "ofi = (6-24)/30")
   }
 
-  test("streaming tick classification (transformWithState) is " +
-      "identical to the batch carry window across split triggers") {
+  test("streaming tick classification (KeyedFold) is identical to the " +
+      "batch carry window across split triggers") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{TickState, TickEventRow}
-    val dir = "/root/testdata/sf0.001"
-    val evDf = graft.operators.StockPipeline.normalize(
-      graft.sources.Tables.events(spark, dir))
     import spark.implicits._
+    // streams `chunks` one trigger each and checks every side against
+    // the batch window over the same events
+    def parity(events: org.apache.spark.sql.DataFrame,
+        chunks: Seq[Seq[TickEventRow]]): Unit =
+      withConf(rocksDbStore) {
+        val stream = org.apache.spark.sql.execution.streaming.runtime
+          .MemoryStream[TickEventRow]
+        val q = TickState.attach(stream.toDS()).writeStream
+          .format("memory").queryName("tick_tws_sink")
+          .outputMode("append").start()
+        try {
+          chunks.foreach { c =>
+            stream.addData(c: _*); q.processAllAvailable()
+          }
+          val streamed = spark.table("tick_tws_sink")
+            .orderBy("ticker", "ts", "event_id").collect()
+          val batch = graft.operators.TimeSeries.tickSides(events)
+            .select("ticker", "ts", "event_id", "volume", "side")
+            .orderBy("ticker", "ts", "event_id").collect()
+          assert(streamed.length === batch.length && batch.nonEmpty)
+          // both classification tiers must be live
+          assert(batch.exists(_.isNullAt(4)), "no unclassified leading run")
+          assert(batch.exists(r => !r.isNullAt(4)), "no classified events")
+          streamed.zip(batch).foreach { case (s, b) =>
+            assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
+          }
+        } finally q.stop()
+      }
+    val evDf = graft.operators.StockPipeline.normalize(
+      graft.sources.Tables.events(spark, "/root/testdata/sf0.001"))
     val rows = evDf.select("ticker", "ts", "price", "volume", "event_id")
       .as[TickEventRow].collect()
-      .sortBy(r => (r.ts.getTime, r.event_id))
-    val chunks = rows.grouped(math.max(rows.length / 3, 1)).toSeq
-    withConf(rocksDbStore) {
-      val stream = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[TickEventRow]
-      val q = TickState.attach(stream.toDS()).writeStream
-        .format("memory").queryName("tick_tws_sink")
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c =>
-          stream.addData(c.toSeq: _*); q.processAllAvailable()
-        }
-        val streamed = spark.table("tick_tws_sink")
-          .orderBy("ticker", "ts", "event_id").collect()
-        val batch = graft.operators.TimeSeries.tickSides(evDf)
-          .select("ticker", "ts", "event_id", "volume", "side")
-          .orderBy("ticker", "ts", "event_id").collect()
-        assert(streamed.length === batch.length && batch.nonEmpty)
-        // both classification tiers must be live on this corpus
-        assert(batch.exists(_.isNullAt(4)), "no unclassified leading run")
-        assert(batch.exists(r => !r.isNullAt(4)), "no classified events")
-        streamed.zip(batch).foreach { case (s, b) =>
-          assert(s.toSeq === b.toSeq, s"stream $s vs batch $b")
-        }
-      } finally q.stop()
-    }
+      .sortBy(r => (r.ts.getTime, r.ts.getNanos, r.event_id))
+    parity(evDf, rows.grouped(math.max(rows.length / 3, 1)).map(_.toSeq).toSeq)
+    // two ticks in one millisecond, in event_id order but not in time
+    // order: the fold must order them by microsecond, as the batch
+    // window does. Tick 3 is an uptick from tick 1 (+1) but a downtick
+    // from tick 2 (-1), so a millisecond order classifies it wrongly
+    def tick(id: Long, ts: String, price: Double) = TickEventRow("A",
+      Timestamp.valueOf(s"2024-01-01 $ts"), price, 1L, id)
+    val sameMs = Seq(tick(1, "10:00:00.000000", 10.0),
+      tick(2, "10:00:01.000900", 11.0), tick(3, "10:00:01.000100", 10.5))
+    parity(sameMs.toDF(), Seq(sameMs))
   }
 
   test("volumeProfileEvents: buckets span min..max, shares sum to 1, " +
